@@ -18,7 +18,6 @@ from address_parser_spark.functions.udfs import (
     extract_mentions_udf,
     normalize_advanced_udf,
     normalize_basic_udf,
-    pair_score_udf,
     candidate_score_udf,
     street_extract_udf,
 )
@@ -32,7 +31,6 @@ __all__ = [
     "extract_mentions_udf",
     "normalize_advanced_udf",
     "normalize_basic_udf",
-    "pair_score_udf",
     "candidate_score_udf",
     "street_extract_udf",
 ]

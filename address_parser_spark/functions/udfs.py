@@ -19,10 +19,7 @@ from address_parser_spark.textops.extract import extract_mentions
 from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
 from address_parser_spark.textops.similarity import (
     indel_ratio,
-    jaro_winkler,
-    levenshtein,
     partial_ratio,
-    token_overlap,
     wratio,
 )
 from address_parser_spark.textops.street import extract_street
@@ -338,34 +335,6 @@ def candidate_score_udf(
     return pd.DataFrame(rows, columns=["base", "partial", "wratio", "combined", "boost"])
 
 
-_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("jw", T.DoubleType()),
-        T.StructField("lev_sim", T.DoubleType()),
-        T.StructField("tok_overlap", T.DoubleType()),
-    ]
-)
-
-
-@pandas_udf(_PAIR_SCHEMA)
-def pair_score_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-    """Mention↔mention similarity bundle for the pair stage (north_star:
-    batched Jaro-Winkler / Levenshtein / token-overlap)."""
-    rows = []
-    for x, y in zip(a, b):
-        x = x if isinstance(x, str) else ""
-        y = y if isinstance(y, str) else ""
-        denom = max(len(x), len(y), 1)
-        rows.append(
-            (
-                jaro_winkler(x, y),
-                1.0 - levenshtein(x, y) / denom,
-                token_overlap(x, y),
-            )
-        )
-    return pd.DataFrame(rows, columns=["jw", "lev_sim", "tok_overlap"])
-
-
 @pandas_udf(T.StringType())
 def street_extract_udf(
     original: pd.Series, province: pd.Series, district: pd.Series, ward: pd.Series
@@ -389,7 +358,7 @@ def _street_and_entity(original: str, std: str, province, district, ward,
     standalone UDF and the fused resolver).
 
     ``entity_std`` is the canonical entity-bearing string the blocking keys
-    and pair scoring run on. When the (repaired) components are known it is
+    and identity edges run on. When the (repaired) components are known it is
     built FROM THEM — ward district province, normalized — so every mention
     of an entity shares one entity_std regardless of which components the
     page happened to render (partial mentions the repair cascade completed
@@ -616,47 +585,16 @@ def make_repair_street_udf(repair_state: dict, spark=None):
     return repair_udf
 
 
-def make_prioritized_udf(inv: dict, spark=None):
-    """(det_p, det_d, det_w, node_id) → candidate agrees with ALL detected
-    components (membership in the intersected alias posting sets — the
-    reference's ``_prefilter_by_prefix`` semantics, inexus_parser.py:2764-2794
-    applied at :2836-2850). Used by the relational strategy; the broadcast
-    kernel computes the same set inline."""
-    bc = spark.sparkContext.broadcast(inv) if spark is not None else None
-    local = inv if bc is None else None
-
-    @pandas_udf(T.BooleanType())
-    def prio_udf(det_p: pd.Series, det_d: pd.Series, det_w: pd.Series,
-                 node_id: pd.Series) -> pd.Series:
-        inv_maps = bc.value if bc is not None else local
-        cache: dict[tuple, frozenset | None] = {}
-        out = []
-        for dp, dd, dw, nid in zip(det_p, det_d, det_w, node_id):
-            key = (dp, dd, dw)
-            pf = cache.get(key, -1)
-            if pf == -1:
-                pf = None
-                if dw:
-                    pf = frozenset(inv_maps["ward"].get(dw, ()))
-                if dd:
-                    s2 = frozenset(inv_maps["district"].get(dd, ()))
-                    pf = s2 if pf is None else pf & s2
-                if dp:
-                    s3 = frozenset(inv_maps["province"].get(dp, ()))
-                    pf = s3 if pf is None else pf & s3
-                cache[key] = pf
-            out.append(bool(pf) and int(nid) in pf)
-        return pd.Series(out)
-
-    return prio_udf
-
-
 def make_prioritized_arr_udf(inv: dict, spark=None):
-    """Array form of ``make_prioritized_udf`` for the aggregate-top-K
-    relational scorer: one row per MENTION with its candidate node-id array
-    → aligned boolean array. The intersected posting set is computed once
-    per row (not once per candidate), so the per-candidate work is a single
-    set-membership test."""
+    """(det_p, det_d, det_w, node_ids) → aligned boolean array: does each
+    candidate agree with ALL detected components (membership in the
+    intersected alias posting sets — the reference's ``_prefilter_by_prefix``
+    semantics, inexus_parser.py:2764-2794 applied at :2836-2850). Used by
+    the aggregate-top-K relational scorer, one row per MENTION with its
+    candidate node-id array; the broadcast kernel computes the same set
+    inline. The intersected posting set is computed once per row (not once
+    per candidate), so the per-candidate work is a single set-membership
+    test."""
     bc = spark.sparkContext.broadcast(inv) if spark is not None else None
     local = inv if bc is None else None
 

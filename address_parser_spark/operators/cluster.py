@@ -214,15 +214,14 @@ def cluster_mentions(
     resolved: DataFrame,
     extra_edges: Optional[DataFrame] = None,
     checkpoint_fn: Optional[Callable[[DataFrame, int], DataFrame]] = None,
-    timings: Optional[dict] = None,
 ) -> DataFrame:
     """Mention clustering with entity-anchor edges (+ optional pair edges).
 
     Same-entity mentions are connected through a virtual anchor vertex
     ``xxhash64(entity_key)`` — a star, not a clique: n-1 edges per entity
     instead of n(n-1)/2, which is what keeps hot entities ("ha noi") from
-    exploding the edge list at web scale. ``extra_edges`` (e.g. high-confidence
-    string-similarity pairs from the pair stage) are unioned in.
+    exploding the edge list at web scale. ``extra_edges`` (e.g. the string-
+    identity edges from ``pairs.equality_edges``) are unioned in.
 
     Returns (mid, url, mention, entity_key, cluster_id) where cluster_id is
     stable (min vertex id in the component).
@@ -245,7 +244,7 @@ def cluster_mentions(
         ).otherwise(F.xxhash64("entity_key", "entity_std")).alias("dst"),
     )
     edges = anchors if extra_edges is None else anchors.unionAll(extra_edges)
-    assignments = connected_components(edges, checkpoint_fn=checkpoint_fn, timings=timings)
+    assignments = connected_components(edges, checkpoint_fn=checkpoint_fn)
     return (
         resolved.join(assignments, resolved["mid"] == assignments["id"], "left")
         .drop("id")

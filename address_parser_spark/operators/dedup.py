@@ -12,7 +12,7 @@ Scale shape notes (the part that matters at 100 TB):
   shuffle); the shuffles are the band-key membership collection (one hash
   exchange, window-count-bounded state — ``_grouped_docs_bounded``) and
   the pair agg; oversized buckets get capped exactly like
-  pairs.candidate_pairs, and pairs are generated JVM-side from each
+  pairs.equality_edges, and pairs are generated JVM-side from each
   bucket's member list — never a bucket self-join.
 - Jaccard pairs: shingle explode → one hash exchange on which a window
   count sizes each shingle's doc set BEFORE the list is collected →
@@ -198,7 +198,7 @@ def _grouped_docs_bounded(rows: DataFrame, key: str, cap: int,
     """(key, df=instance count, ``out``=sorted ``value`` array) for keys
     with df <= cap, with BOUNDED aggregation state on corpus-hot keys and
     ONE wide shuffle of the instances. ``value`` defaults to ``doc_id``;
-    pairs.candidate_pairs reuses this exact shape with a struct value —
+    pairs.equality_edges reuses this exact shape with a struct value —
     keep the implementations shared so the single-exchange plan guarantee
     is tested once and holds for both.
 
@@ -247,9 +247,8 @@ def _grouped_docs_bounded(rows: DataFrame, key: str, cap: int,
 def _doc_pairs_per_bucket(grouped: DataFrame, docs_col: str = "docs") -> DataFrame:
     """All (doc_a < doc_b) pairs from each row's SORTED doc_id array,
     generated JVM-side (``transform × slice`` combinations — the same
-    two-shuffle shape as pairs.candidate_pairs, no self-join). Duplicate
-    ids inside one array contribute multiplicity, same-doc pairs are
-    skipped."""
+    shape as pairs.equality_edges, no self-join). Duplicate ids inside one
+    array contribute multiplicity, same-doc pairs are skipped."""
     ds = F.col(docs_col)
     return (
         grouped.select(

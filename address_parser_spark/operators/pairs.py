@@ -1,19 +1,21 @@
-"""Mention↔mention candidate-pair generation, scoring, and edge selection.
+"""Mention↔mention blocking keys and string-identity edges.
 
 The pair stage of the north_star: blocking keys = sorted-token key + MinHash-
 LSH band keys over char-4-gram shingles (both JVM-side, functions.columns),
-candidate pairs generated by a self-join *within* keys, scored with Arrow-
-batched Jaro-Winkler / Levenshtein / token-overlap (functions.udfs), and
-thresholded into edges for connected components.
+then ``equality_edges`` joins two mentions sharing a key when their ``canon``
+(sorted token set) AND ``digit_sig`` (role-tagged digits) agree — the edges
+connected components clusters on. No similarity scores are computed: looser
+rules (overlap-coefficient ≥1, Jaro-Winkler on sorted strings) were tried and
+cratered precision at the F1≥0.99 bar.
 
 Scale levers, applied in order:
-- **block-size cap**: buckets larger than ``max_block`` are dropped before the
-  self-join (the join is quadratic in bucket size; classic ER practice and the
-  moral equivalent of the reference's TOPK cap, inexus_parser.py:114). Dropped
-  buckets are counted, not silently ignored.
-- **min-key dedup**: a pair sharing k keys would surface k times; it is kept
-  only at its lexicographically-smallest shared key — dedup without a
-  ``distinct`` over the full pair set.
+- **block-size cap**: buckets larger than ``max_block`` are dropped before
+  any pair exists (pairing is quadratic in bucket size; classic ER practice
+  and the moral equivalent of the reference's TOPK cap,
+  inexus_parser.py:114). Dropped buckets are counted by ``dropped_blocks``.
+- **small rows**: each member reaches the pair generator as an
+  (identity-hash, mid) struct, and only equal-hash combinations are emitted
+  — non-matching pairs never materialize.
 - **salting is unnecessary here by construction**: capped buckets bound the
   per-key fan-out, so no reducer sees more than ``max_block²`` rows; AQE skew
   handling covers the rest.
@@ -28,19 +30,15 @@ from address_parser_spark.functions.columns import (
     char_ngrams_col,
     gram_hash_col,
     lsh_band_keys_from_hashes,
-    sorted_token_key_col,
 )
-from address_parser_spark.functions.udfs import pair_score_udf
 
 DEFAULT_MAX_BLOCK = 64
-DEFAULT_EDGE_JW = 0.97
 
 
 def with_blocking_keys(
     mentions: DataFrame,
     std_col: str = "entity_std",
     digit_col: str = "std",
-    num_hashes: int = 30,
     bands: int = 10,
     rows: int = 3,
 ) -> DataFrame:
@@ -134,112 +132,27 @@ def with_blocking_keys(
     )
 
 
-def candidate_pairs(
-    keyed: DataFrame,
-    id_col: str = "mid",
-    std_col: str = "canon",
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
-    """Pairs within blocking keys → (key, mid_a, std_a, mid_b, std_b, dsigs).
-
-    Each unordered pair appears exactly once (kept at its smallest shared key,
-    ``mid_a < mid_b``).
-
-    TWO shuffles total: one hash repartition by key, on which a window
-    count sizes each block and the ``max_block`` filter drops oversized
-    blocks BEFORE any member list exists (blocking keys are Zipf-hot at
-    corpus scale — a boilerplate key shared by millions of mentions must
-    never materialize its full struct list in one aggregation buffer;
-    WindowExec buffers one key group at a time in a spillable row array,
-    so a hot key costs disk, never an OOM), then the surviving members are
-    collected on the same clustering with bounded ≤ ``max_block`` state.
-    Pair combinations are generated JVM-side from the sorted member array
-    (``transform × slice``, no self-join), and one hash-agg by
-    (mid_a, mid_b) keeps each pair at its minimal key. The previous
-    formulation (distinct → size-agg → filter-join → key self-join → dedup
-    agg) paid five shuffles and re-evaluated the exploded subtree per
-    consumer; it was the single largest serial term in the pipeline profile.
-    ``keys`` is array-distinct by construction (with_blocking_keys uses
-    array_union), so (mid, key) needs no distinct.
-    """
-    from address_parser_spark.operators.dedup import _grouped_docs_bounded
-
-    exploded = keyed.select(
-        F.col(id_col).alias("mid"),
-        F.col(std_col).alias("std"),
-        F.col("digit_sig"),
-        F.explode("keys").alias("key"),
-    )
-
-    ms = F.col("ms")  # _grouped_docs_bounded array_sorts → struct order → mid ascending
-    blocks = (
-        _grouped_docs_bounded(
-            exploded, "key", max_block,
-            value=F.struct("mid", "std", "digit_sig"), out="ms",
-        )
-        .filter(F.col("df") >= 2)
-        .select("key", "ms")
-    )
-    flat = (
-        blocks.select(
-            "key",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ms,
-                        lambda x, i: F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: F.struct(x.alias("a"), y.alias("b")),
-                        ),
-                    )
-                )
-            ).alias("p"),
-        )
-        .select(
-            "key",
-            F.col("p.a.mid").alias("mid_a"),
-            F.col("p.a.std").alias("std_a"),
-            F.col("p.a.digit_sig").alias("dsig_a"),
-            F.col("p.b.mid").alias("mid_b"),
-            F.col("p.b.std").alias("std_b"),
-            F.col("p.b.digit_sig").alias("dsig_b"),
-        )
-    )
-
-    # Keep each pair only at its minimal shared key.
-    return flat.groupBy("mid_a", "mid_b").agg(
-        F.min("key").alias("key"),
-        F.first("std_a").alias("std_a"),
-        F.first("std_b").alias("std_b"),
-        F.first("dsig_a").alias("dsig_a"),
-        F.first("dsig_b").alias("dsig_b"),
-    )
-
-
 def equality_edges(
     keyed: DataFrame,
     id_col: str = "mid",
     max_block: int = DEFAULT_MAX_BLOCK,
 ) -> DataFrame:
-    """String-identity edges (``match_edges``'s default rule) computed without
+    """String-identity edges: within every block of at most ``max_block``
+    members, each pair whose canon AND digit_sig are EQUAL, computed without
     materializing non-matching pairs.
 
-    ``match_edges(candidate_pairs(keyed))`` generates EVERY within-block pair
-    — carrying both canon strings and both digit signatures through the block
-    lists, the pair explosion, and a full (mid_a, mid_b) dedup shuffle — and
-    then keeps only the pairs whose canon AND digit_sig are EQUAL. For the
-    equality rule all of that is avoidable (guide-§8 shape: decide with small
-    rows): each member is reduced to (identity-hash, mid) where the hash is
-    ``xxhash64(canon, digit_sig)``, blocks keep the exact same ``max_block``
-    cap (df counts ALL members of the key, matching candidate_pairs), and the
-    JVM pair generator emits only equal-hash combinations — the struct sort
-    puts equal-hash members adjacent, so ``src < dst`` orientation still falls
-    out of the array order. Duplicate emissions across shared keys are NOT
-    deduped here: every consumer (connected_components) canonicalizes edges
-    with a distinct already, so the per-pair min-key shuffle bought nothing
-    on this path. The edge SET is identical to the candidate_pairs route
-    (pinned by tests/test_pair_generation.py); 64-bit identity hashing is the
-    same collision posture as ``mid`` itself (xxhash64 of url+mention).
+    Decide with small rows: each member is reduced to (identity-hash, mid)
+    where the hash is ``xxhash64(canon, digit_sig)``, blocks are sized by
+    ``df`` (the count of ALL members of the key) before any member list
+    exists, and the JVM pair generator emits only equal-hash combinations —
+    the struct sort puts equal-hash members adjacent, so ``src < dst``
+    orientation falls out of the array order. Duplicate emissions across
+    shared keys are NOT deduped here: every consumer (connected_components)
+    canonicalizes edges with a distinct already, so a per-pair dedup
+    shuffle would buy nothing. The edge SET is pinned against a plain-Python
+    string-equality reference by tests/test_pair_generation.py; 64-bit
+    identity hashing is the same collision posture as ``mid`` itself
+    (xxhash64 of url+mention).
     """
     from address_parser_spark.operators.dedup import _grouped_docs_bounded
 
@@ -288,41 +201,4 @@ def dropped_blocks(keyed: DataFrame, id_col: str = "mid", max_block: int = DEFAU
         exploded.groupBy("key")
         .agg(F.count(F.lit(1)).alias("block_n"))
         .filter(F.col("block_n") > max_block)
-    )
-
-
-def score_pairs(pairs: DataFrame) -> DataFrame:
-    """Arrow-batched similarity bundle per candidate pair."""
-    return pairs.withColumn("ps", pair_score_udf(F.col("std_a"), F.col("std_b"))).select(
-        "mid_a", "mid_b", "key", "std_a", "std_b", "dsig_a", "dsig_b",
-        F.col("ps.jw").alias("jw"),
-        F.col("ps.lev_sim").alias("lev_sim"),
-        F.col("ps.tok_overlap").alias("tok_overlap"),
-    )
-
-
-def match_edges(pairs: DataFrame, jw_threshold: float | None = None) -> DataFrame:
-    """High-confidence string-identity edges for clustering.
-
-    Conservative by design: the authoritative match signal is canonical-node
-    agreement (cluster.cluster_mentions anchors); string edges merge only
-    mentions with IDENTICAL canonical strings (sorted non-generic token sets).
-    Looser rules were tried and rejected: overlap-coefficient ≥1 merges
-    subset token sets ("tan thuan …" ⊂ "thanh tan thuan …" = adjacent wards),
-    and Jaro-Winkler on sorted strings inflates on long shared prefixes —
-    both crater precision at the F1≥0.99 bar. Pass ``jw_threshold`` to add
-    near-identity edges when recall matters more than precision.
-
-    Accepts raw ``candidate_pairs`` output or ``score_pairs`` output: the
-    default (equality-only) rule needs no similarity scores, so the pipeline
-    feeds raw pairs and never pays the scoring UDF for edge generation; with
-    ``jw_threshold`` set, the jw column is computed here if absent.
-    """
-    cond = (F.col("std_a") == F.col("std_b")) & (F.col("dsig_a") == F.col("dsig_b"))
-    if jw_threshold is not None:
-        if "jw" not in pairs.columns:
-            pairs = score_pairs(pairs)
-        cond = cond | ((F.col("jw") >= jw_threshold) & (F.col("dsig_a") == F.col("dsig_b")))
-    return pairs.filter(cond).select(
-        F.col("mid_a").alias("src"), F.col("mid_b").alias("dst")
     )

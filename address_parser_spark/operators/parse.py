@@ -58,13 +58,16 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
 
     When the frame carries an ``html`` column, pages whose ``text`` is
     null/empty take a branch whose fused UDF FIRST extracts text from the
-    markup (``make_extract_features_udf(from_html=True)``). Same filtered-
-    union Catalyst shape as ``textops.html.ensure_text`` — texted rows never
-    ship html bytes to Python — but each branch plans exactly ONE
-    ArrowEvalPython: composing ensure_text in front of this function chained
-    the html UDF and the extract UDF in one stage, i.e. two concurrent
-    Python workers per task slot on the miss branch (and ~0.8 s of pure
-    overhead at the 1200-page bench even when the miss branch was empty)."""
+    markup (``make_extract_features_udf(from_html=True)``). Deliberately a
+    filtered two-branch union, NOT ``when(need, udf(html))``: Catalyst
+    extracts Python UDFs out of CASE branches into an unconditional
+    ArrowEvalPython projection, so the ``when`` shape would ship EVERY
+    page's html bytes through Arrow. With the union, texted rows never ship
+    html bytes to Python, and each branch plans exactly ONE ArrowEvalPython:
+    a separate html→text UDF chained in front of the extract UDF put two
+    concurrent Python workers per task slot on the miss branch (and ~0.8 s
+    of pure overhead at the 1200-page bench even when the miss branch was
+    empty)."""
     regs = registries or {"province": [], "district": [], "ward": []}
     features = make_extract_features_udf(regs, spark=pages.sparkSession)
     base = pages.filter(F.col("lang") == lang)
@@ -471,11 +474,9 @@ def resolve_mentions(
     nodes_df: DataFrame,
     index_df: DataFrame,
     registries: dict[str, list[str]] | None = None,
-    persist_intermediates: bool = True,
     strategy: str = "broadcast",
     nodes: list[dict] | None = None,
     repair_state: dict | None = None,
-    timings: dict | None = None,
 ) -> DataFrame:
     """Full extract → dedup → resolve (block/gate/score/argmax/street)
     pipeline; winners joined back onto the (url, mention) fact rows.
@@ -509,14 +510,7 @@ def resolve_mentions(
     each of them (measured: the extract UDF chain re-executing up to 4× with
     AQE-dependent variance).
     """
-    import time as _time
-
-    _t = _time.monotonic()
-    mentions = extract_normalize(pages, registries)
-    if persist_intermediates:
-        mentions = mentions.localCheckpoint(eager=True)
-    if timings is not None:
-        timings["extract_ckpt"] = round(_time.monotonic() - _t, 2)
+    mentions = extract_normalize(pages, registries).localCheckpoint(eager=True)
 
     # dropDuplicates, not a pre-repartitioned groupBy: a round-6 variant
     # fused the dedup onto the kernel's std exchange (repartition(std) →
@@ -585,44 +579,38 @@ def resolve_mentions(
             .select("mention", "std", "w.*")
         )
         winners = _with_format_and_key(winners)
-        gate_obs = None
-        if persist_intermediates:
-            # Isolate the python-CPU-bound kernel into its own job: embedded
-            # in the fact-join plan it inherits that plan's (byte-driven)
-            # parallelism decisions — measured 52s vs 11s for the identical
-            # kernel at local[32]. The frame is distinct-mention-sized.
-            #
-            # The broadcast-gate metrics (row count + serialized-byte
-            # estimate, consumed below) ride on THIS materialization via
-            # observe — the gate previously ran its own full-frame
-            # aggregation job after the checkpoint, one more driver barrier
-            # in the serial floor.
-            from pyspark.sql import Observation
+        # Isolate the python-CPU-bound kernel into its own job: embedded
+        # in the fact-join plan it inherits that plan's (byte-driven)
+        # parallelism decisions — measured 52s vs 11s for the identical
+        # kernel at local[32]. The frame is distinct-mention-sized.
+        #
+        # The broadcast-gate metrics (row count + serialized-byte
+        # estimate, consumed below) ride on THIS materialization via
+        # observe — the gate previously ran its own full-frame
+        # aggregation job after the checkpoint, one more driver barrier
+        # in the serial floor.
+        from pyspark.sql import Observation
 
-            gate_obs = Observation("winners_gate")
-            _t = _time.monotonic()
-            winners = winners.observe(
-                gate_obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    sum(
-                        # octet_length: UTF-8 BYTES, not code points —
-                        # accented Vietnamese text is ~1.5-2× its character
-                        # count on the wire.
-                        (F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
-                         + F.lit(8)
-                         for c in winners.columns),
-                        F.lit(0),
-                    )
-                ).alias("b"),
-            ).localCheckpoint(eager=True)
-            if timings is not None:
-                timings["resolve_kernel_ckpt"] = round(_time.monotonic() - _t, 2)
+        gate_obs = Observation("winners_gate")
+        winners = winners.observe(
+            gate_obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                sum(
+                    # octet_length: UTF-8 BYTES, not code points —
+                    # accented Vietnamese text is ~1.5-2× its character
+                    # count on the wire.
+                    (F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
+                     + F.lit(8)
+                     for c in winners.columns),
+                    F.lit(0),
+                )
+            ).alias("b"),
+        ).localCheckpoint(eager=True)
     else:
         from address_parser_spark.functions.udfs import build_resolver_state
 
-        if persist_intermediates:
-            uniq = uniq.localCheckpoint(eager=True)
+        uniq = uniq.localCheckpoint(eager=True)
         inv = build_resolver_state(nodes)["inv"]
         cands = block_candidates(uniq, index_df)
         scored = score_candidates(cands, uniq, nodes_df, inv=inv)
@@ -684,7 +672,7 @@ def resolve_mentions(
     # the mention string kept as an equality conjunct (collision-proof).
     fact = mentions.select("mid", "url", "mention")
     broadcast_winners = False
-    if persist_intermediates and strategy == "broadcast":
+    if strategy == "broadcast":
         # Gate on ESTIMATED BYTES, not rows: winners carries 15+ string
         # columns, so a row-count cap alone could ship a multi-GB broadcast
         # to the driver and every executor (OOM on clusters whose executors

@@ -1,8 +1,8 @@
 """The five-stage entity-resolution pipeline (SURVEY §7), resumable.
 
 pages → (1) extract+normalize → (2) resolve vs gazetteer (block/gate/score/
-argmax) → (3) blocking keys + candidate pairs + scoring → (4) edges →
-(5) connected components → clusters.
+argmax) → (3) blocking keys → (4) string-identity edges → (5) connected
+components → clusters.
 
 Run standalone:
     spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py
@@ -89,26 +89,16 @@ def run_pipeline(
     store: Optional[StageStore] = None,
     max_block: int = 64,
     attach_ward_mapping: bool = True,
-    timings: Optional[dict] = None,
 ) -> DataFrame:
     """pages → clustered mentions (mid, url, mention, std, parsed components,
-    street_address, format, entity_key, cluster_id, new_ward_code/-name).
-
-    ``timings``: optional dict the pipeline fills with per-barrier wall times
-    (scripts/profile_run.py) — the serial-fraction attribution the scaling
-    criterion demands is measured, never guessed."""
-    import time as _time
-
+    street_address, format, entity_key, cluster_id, new_ward_code/-name)."""
     from address_parser_spark.gazetteer.nodes import build_repair_state
 
-    _t0 = _time.monotonic()
     nodes = build_nodes(gaz)
     nodes_df = nodes_to_spark(spark, nodes)
     index_df = ngram_index_df(nodes_df)
     registries = alias_registries(gaz)
     repair_state = build_repair_state(gaz, nodes)
-    if timings is not None:
-        timings["gaz_prep"] = round(_time.monotonic() - _t0, 2)
 
     def stage(name: str, build, partition_by=None, multi_consumer: bool = True) -> DataFrame:
         """Materialize each multi-consumer stage exactly once: durable
@@ -120,11 +110,6 @@ def run_pipeline(
         if store is None:
             if not multi_consumer:
                 return build()
-            if timings is not None:
-                t = _time.monotonic()
-                out = build().localCheckpoint(eager=True)
-                timings[f"stage_{name}"] = round(_time.monotonic() - t, 2)
-                return out
             # localCheckpoint rather than persist: materializes once AND
             # truncates the logical plan to an RDD scan. Persisted frames with
             # UDF-heavy plans make every subsequent query pay driver-side plan
@@ -142,28 +127,26 @@ def run_pipeline(
         return store.run_stage(name, build, partition_by=partition_by)
 
     # html:binary intake (BASELINE.json input_hint) is handled INSIDE
-    # extract_normalize: pages whose text column is null/empty take a union
-    # branch whose fused UDF extracts text from markup first; texted rows
-    # never ship html bytes to Python (same Catalyst shape as
-    # textops.html.ensure_text but one ArrowEvalPython per branch instead of
-    # a chained html UDF).
+    # extract_normalize: pages whose text column is null/empty take a
+    # filtered union branch whose fused UDF extracts text from markup first;
+    # texted rows never ship html bytes to Python, and each branch plans one
+    # ArrowEvalPython.
     resolved = stage(
         "resolved",
         lambda: resolve_mentions(
             pages, nodes_df, index_df, registries,
-            nodes=nodes, repair_state=repair_state, timings=timings,
+            nodes=nodes, repair_state=repair_state,
         ),
     )
-    # keyed is consumed exactly once (candidate_pairs is a single-aggregation
-    # chain since the collect_list rewrite), so it needs no barrier when no
-    # durable store is attached — with a store it still lands as a resumable
-    # snapshot stage.
+    # keyed is consumed exactly once (equality_edges is a single-aggregation
+    # chain), so it needs no barrier when no durable store is attached —
+    # with a store it still lands as a resumable snapshot stage.
     keyed = stage("keyed", lambda: with_blocking_keys(resolved), multi_consumer=False)
-    # Equality-only edge rule → the dedicated identity-hash pair generator:
-    # no canon/digit_sig strings through the block lists, no non-matching
-    # pair rows, no per-pair dedup shuffle (connected_components
-    # canonicalizes edges anyway). Same edge set as
-    # match_edges(candidate_pairs(...)) — pinned by test_pair_generation.
+    # Equality-only edge rule → the identity-hash pair generator: no
+    # canon/digit_sig strings through the block lists, no non-matching pair
+    # rows, no per-pair dedup shuffle (connected_components canonicalizes
+    # edges anyway). The edge set is pinned against a plain-Python
+    # string-equality reference by test_pair_generation.
     edges = stage(
         "edges",
         lambda: equality_edges(keyed, max_block=max_block),
@@ -174,9 +157,7 @@ def run_pipeline(
         checkpoint_fn = None
         if store is not None:
             checkpoint_fn = lambda df, it: store.write(df, f"cc_iter_{it + 1:03d}")
-        return cluster_mentions(
-            resolved, extra_edges=edges, checkpoint_fn=checkpoint_fn, timings=timings
-        )
+        return cluster_mentions(resolved, extra_edges=edges, checkpoint_fn=checkpoint_fn)
 
     clustered = stage("clustered", build_clusters, multi_consumer=False)
     if attach_ward_mapping and gaz.ward_mappings:

@@ -5,6 +5,12 @@ pages schema) → the batch pipeline's OWN extraction stage (narrow transforms
 are stream-compatible as-is — one code path for batch and streaming) →
 watermarked tumbling-window aggregation and within-watermark dedup.
 
+Because streaming goes through ``extract_normalize``, an ``html`` column on a
+stream is honoured the same way as in batch: rows whose ``text`` is null or
+empty take the html→text branch and yield mentions from their markup.
+(``PAGES_STREAM_SCHEMA`` below carries no ``html`` column; a custom stream
+schema that adds one opts in.)
+
 The stateful pieces use the built-in operators (windowed agg, dropDuplicates
 with watermark); no custom state store is needed for the reference's
 capability surface. ``applyInPandasWithState`` remains the escape hatch for

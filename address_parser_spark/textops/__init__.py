@@ -20,11 +20,8 @@ from address_parser_spark.textops.ngrams import char_ngrams, char_ngram_set, wor
 from address_parser_spark.textops.similarity import (
     dice_coefficient,
     indel_ratio,
-    jaro_winkler,
     lcs_length,
-    levenshtein,
     partial_ratio,
-    token_overlap,
     wratio,
 )
 from address_parser_spark.textops.street import extract_street, component_signature
@@ -43,11 +40,8 @@ __all__ = [
     "word_shingles",
     "dice_coefficient",
     "indel_ratio",
-    "jaro_winkler",
     "lcs_length",
-    "levenshtein",
     "partial_ratio",
-    "token_overlap",
     "wratio",
     "extract_street",
     "component_signature",

@@ -11,6 +11,7 @@ DuckDB oracles; this file pins them against a naive Python reference.
 
 from __future__ import annotations
 
+from collections import defaultdict
 from itertools import combinations
 
 import pytest
@@ -76,19 +77,61 @@ def test_doc_pairs_equal_legacy_selfjoin_on_random_buckets(spark):
     assert new == legacy and len(new) > 50
 
 
+def _reference_equality_edges(rows, max_block: int) -> set[tuple[int, int]]:
+    """Plain-Python edge rule over collected keyed rows: a block is every
+    row carrying the key, dropped when its member count exceeds
+    ``max_block`` (the instance count ``dedup._grouped_docs_bounded``
+    windows over); inside a kept block two distinct mids are joined when
+    their ``canon`` AND ``digit_sig`` strings are equal."""
+    blocks: dict[str, list] = defaultdict(list)
+    for r in rows:
+        for key in r["keys"]:
+            blocks[key].append(r)
+    edges = set()
+    for members in blocks.values():
+        if len(members) > max_block:
+            continue
+        for a, b in combinations(members, 2):
+            if (
+                a["mid"] != b["mid"]
+                and a["canon"] == b["canon"]
+                and a["digit_sig"] == b["digit_sig"]
+            ):
+                edges.add(tuple(sorted((a["mid"], b["mid"]))))
+    return edges
+
+
+def _hand_keyed_rows() -> list[tuple[int, str, str, list[str]]]:
+    """(mid, canon, digit_sig, keys) rows pinning the cap boundary at both
+    tested caps — keys with exactly 3, 4, 64 and 65 members, all of one
+    identity — and the digit rule: an equal-canon pair whose digit_sig
+    differs shares a block with a third, fully equal member."""
+    rows = []
+    mid = 1000
+    for size in (3, 4, 64, 65):
+        for _ in range(size):
+            rows.append((mid, f"block {size}", "?|u|", [f"size#{size}"]))
+            mid += 1
+    rows += [
+        (1, "phuong 3 quan 10", "?|u|3 10", ["digits#"]),
+        (2, "phuong 3 quan 10", "?|u|10 3", ["digits#"]),
+        (3, "phuong 3 quan 10", "?|u|3 10", ["digits#"]),
+    ]
+    return rows
+
+
+def _clique(mids) -> set[tuple[int, int]]:
+    return {tuple(sorted(p)) for p in combinations(mids, 2)}
+
+
 def test_equality_edges_match_candidate_pair_route(spark, gaz):
-    """The pipeline's identity-hash edge generator must emit EXACTLY the edge
-    set of the route it replaced — match_edges(candidate_pairs(keyed)) — on a
-    real keyed frame (same blocks, same max_block cap semantics, equal canon
-    AND digit_sig required), modulo the per-pair dedup the old route paid
-    (connected_components canonicalizes either way)."""
-    from address_parser_spark.operators.pairs import (
-        candidate_pairs,
-        equality_edges,
-        match_edges,
-        with_blocking_keys,
-    )
-    from address_parser_spark.plans.pipeline import run_pipeline  # noqa: F401
+    """The pipeline's identity-hash edge generator must emit EXACTLY the
+    edges of the candidate-pair rule it replaced — every within-block pair,
+    kept when canon AND digit_sig are equal — here a plain-Python reference
+    (same blocks, same ``max_block`` cap, string equality rather than
+    xxhash64), on a real keyed frame and on a hand-built one that sits on
+    the cap boundary at both tested caps."""
+    from address_parser_spark.operators.pairs import equality_edges, with_blocking_keys
     from address_parser_spark.gazetteer.nodes import (
         alias_registries, build_nodes, build_repair_state, ngram_index_df, nodes_to_spark,
     )
@@ -102,18 +145,29 @@ def test_equality_edges_match_candidate_pair_route(spark, gaz):
         pages, nodes_df, ngram_index_df(nodes_df), alias_registries(gaz),
         nodes=nodes, repair_state=build_repair_state(gaz, nodes),
     )
-    keyed = with_blocking_keys(resolved).localCheckpoint(eager=True)
+    real = with_blocking_keys(resolved).localCheckpoint(eager=True)
+    hand = spark.createDataFrame(
+        _hand_keyed_rows(), "mid long, canon string, digit_sig string, keys array<string>"
+    )
 
-    sizes = {}
-    for cap in (64, 3):  # default cap AND a tight cap that actually drops blocks
-        old = {
-            tuple(sorted((r["src"], r["dst"])))
-            for r in match_edges(candidate_pairs(keyed, max_block=cap)).collect()
-        }
-        new = {
-            tuple(sorted((r["src"], r["dst"])))
-            for r in equality_edges(keyed, max_block=cap).collect()
-        }
-        assert new == old, (cap, new ^ old)
-        sizes[cap] = len(new)
-    assert sizes[64] > 0  # non-vacuous: the corpus must actually produce edges
+    got = {}
+    for name, keyed in (("real", real), ("hand", hand)):
+        rows = keyed.select("mid", "canon", "digit_sig", "keys").collect()
+        for cap in (64, 3):  # default cap AND a tight cap that actually drops blocks
+            want = _reference_equality_edges(rows, cap)
+            new = {
+                tuple(sorted((r["src"], r["dst"])))
+                for r in equality_edges(keyed, max_block=cap).collect()
+            }
+            assert new == want, (name, cap, new ^ want)
+            got[name, cap] = new
+    assert got["real", 64]  # non-vacuous: the corpus must actually produce edges
+    # cap boundary: a block of exactly max_block members is kept, one more is dropped
+    at = {3: range(1000, 1003), 64: range(1007, 1071)}
+    over = {3: range(1003, 1007), 64: range(1071, 1136)}
+    for cap in (64, 3):
+        assert _clique(at[cap]) <= got["hand", cap]
+        assert not _clique(over[cap]) & got["hand", cap]
+        # digit rule: equal canon with a different digit_sig is no edge
+        assert (1, 3) in got["hand", cap]
+        assert not {(1, 2), (2, 3)} & got["hand", cap]

@@ -200,22 +200,34 @@ def test_media_decode_is_pure_map_chain(spark, queries):
 
 
 def test_ensure_text_html_branch_isolated(spark, gaz):
-    """ensure_text must plan the html→text UDF on the filtered miss-branch
-    ONLY (one ArrowEvalPython total), with the null/empty predicate pushed
-    to both branch scans — the deliberate alternative to when(udf(html)),
+    """extract_normalize on an html-carrying frame must plan a filtered
+    two-branch union with exactly ONE ArrowEvalPython per branch (the fused
+    extract UDF, on text or on html) and the null/empty-text predicate on
+    both branch scans — the deliberate alternative to when(udf(html)),
     which Catalyst would hoist into an unconditional projection over every
-    page's html bytes."""
+    page's html bytes. Texted rows never ship html to Python."""
+    from address_parser_spark.gazetteer.nodes import alias_registries
+    from address_parser_spark.operators.parse import extract_normalize
     from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
-    from address_parser_spark.textops.html import ensure_text
 
     pages, _ = synth_pages_local(gaz, 30)
     df = spark.createDataFrame(pages, PAGES_SCHEMA)
-    plan = plan_of(ensure_text(df))
-    # one UDF NODE (the formatted plan names each node in both the tree
-    # summary and the detail section, so count node headers)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    plan = plan_of(extract_normalize(df, alias_registries(gaz)))
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    unions = [i for i, l in enumerate(tree) if re.match(r"Union \(\d+\)", l)]
+    assert len(unions) == 1, plan
+    below = tree[unions[0] + 1:]
+    first = [l for l in below if l.startswith(":")]
+    second = [l for l in below if not l.startswith(":")]
+    # one UDF node per union branch (the formatted plan names each node in
+    # both the tree summary and the detail section, so count tree lines)
+    for branch in (first, second):
+        assert sum("ArrowEvalPython" in l for l in branch) == 1, plan
     # both branches filter before the union (on a non-nullable local frame
     # the isnull term constant-folds away, leaving the empty-string checks)
-    assert re.search(r"Condition : NOT \(text|isnotnull\(text", plan)
-    assert re.search(r"Condition : \(text|isnull\(text", plan)
-    assert "Union" in plan
+    assert re.search(r"Condition : .*NOT \(text|isnotnull\(text", plan)
+    assert re.search(r"Condition : .*(?<!NOT )\(text#\d+ = \)|isnull\(text", plan)
+    # the texted branch's UDF input carries no html column
+    udf_inputs = re.findall(r"\(\d+\) ArrowEvalPython\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert len(udf_inputs) == 2
+    assert sorted("html" in cols for cols in udf_inputs) == [False, True]

@@ -33,72 +33,6 @@ def char_ngrams_col(col: Column, n: int = 4, distinct: bool = True) -> Column:
     return F.array_distinct(grams) if distinct else grams
 
 
-def dice_col(intersection: Column, size_a: Column, size_b: Column) -> Column:
-    """Sørensen–Dice from precomputed counts: ``2·∩ / (|A|+|B|)``.
-
-    The blocking join's per-pair match count IS the intersection cardinality
-    (distinct grams joined against distinct postings), so the Dice gate is free
-    — no set materialization, evaluated JVM-side before any scoring UDF
-    (manual predicate staging per SURVEY §4).
-    """
-    return (F.lit(2.0) * intersection) / (size_a + size_b)
-
-
-def _hash64(col: Column) -> Column:
-    """Deterministic 64-bit hash of a string, JVM-side."""
-    return F.xxhash64(col)
-
-
-def minhash_signature_col(grams: Column, num_hashes: int = 32, seed: int = 7) -> Column:
-    """MinHash signature as ``array<bigint>`` — fully JVM-side.
-
-    ``sig[j] = min over g of pmod(a_j · xxhash64(g) + b_j, P)`` with per-j
-    parameters derived deterministically from ``seed``. A nested ``transform``
-    keeps everything in codegen: no UDF, no shuffle, no MLlib dependency
-    (hand-rolled per SURVEY §1.4 for determinism).
-    """
-    import random
-
-    rng = random.Random(seed)
-    params = [(rng.randrange(1, MINHASH_PRIME), rng.randrange(0, MINHASH_PRIME)) for _ in range(num_hashes)]
-    param_col = F.array(*[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in params])
-    return F.transform(
-        param_col,
-        lambda p: F.coalesce(
-            F.array_min(
-                F.transform(
-                    grams,
-                    lambda g: F.pmod(
-                        p["a"] * F.pmod(_hash64(g), F.lit(MINHASH_PRIME)) + p["b"],
-                        F.lit(MINHASH_PRIME),
-                    ),
-                )
-            ),
-            F.lit(MINHASH_PRIME),
-        ),
-    )
-
-
-def lsh_band_keys_col(signature: Column, bands: int = 8, rows: int = 4) -> Column:
-    """Band keys ``array<string>`` for LSH bucketing: hash of each ``rows``-
-    slice of the signature, prefixed with the band index so buckets from
-    different bands never collide.
-
-    NOTE: pass a MATERIALIZED signature column (its own projection/cache) —
-    handing the raw ``minhash_signature_col`` expression here makes Catalyst's
-    CollapseProject inline the whole signature into every band, multiplying
-    the hash work by the band count. For expression-only pipelines use
-    ``lsh_band_keys_from_grams`` instead.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat_ws(
-            "#", b.cast("string"),
-            F.xxhash64(F.concat_ws(",", F.slice(signature, b * rows + 1, rows))).cast("string"),
-        ),
-    )
-
-
 def gram_hash_col(grams: Column) -> Column:
     """Shingle array → array of 64-bit hashes reduced mod the MinHash prime.
 
@@ -107,7 +41,7 @@ def gram_hash_col(grams: Column) -> Column:
     permutation lambdas pastes (and re-evaluates) the whole generation N
     times per row — measured as ~180 CPU-seconds for the blocking-key stage
     on an 11k-mention corpus, 30× the necessary work."""
-    return F.transform(grams, lambda g: F.pmod(_hash64(g), F.lit(MINHASH_PRIME)))
+    return F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit(MINHASH_PRIME)))
 
 
 def lsh_band_keys_from_hashes(ghash: Column, bands: int = 10, rows: int = 3,
@@ -144,24 +78,6 @@ def lsh_band_keys_from_hashes(ghash: Column, bands: int = 10, rows: int = 3,
             F.concat_ws("#", F.lit(str(band)), F.xxhash64(F.concat_ws(",", *parts)).cast("string"))
         )
     return F.array(*band_keys)
-
-
-def lsh_band_keys_from_grams(grams: Column, bands: int = 10, rows: int = 3,
-                             seed: int = 7) -> Column:
-    """Band keys straight from a shingle array. Convenience form — prefer
-    staging ``gram_hash_col`` as a real column and calling
-    ``lsh_band_keys_from_hashes`` so the shingle generation/hashing isn't
-    duplicated into every permutation lambda."""
-    return lsh_band_keys_from_hashes(gram_hash_col(grams), bands=bands, rows=rows, seed=seed)
-
-
-def sorted_token_key_col(std: Column) -> Column:
-    """Sorted-token blocking key: distinct whitespace tokens, sorted, joined.
-
-    The cheap exact-ish blocking key (north_star): two differently-ordered
-    renderings of the same address land in the same block.
-    """
-    return F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(std, " "))))
 
 
 def canonical_tokens_col(std: Column) -> Column:

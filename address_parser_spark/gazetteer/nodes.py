@@ -363,9 +363,6 @@ def build_repair_state(gaz: Gazetteer, nodes: list[dict]) -> dict:
     }
 
 
-INDEX_SCHEMA = "g string, node_id long, n_primary int, is_primary boolean"
-
-
 def ngram_index_df(nodes_df: DataFrame) -> DataFrame:
     """Inverted postings derived IN SPARK from the nodes DataFrame.
 
@@ -377,6 +374,10 @@ def ngram_index_df(nodes_df: DataFrame) -> DataFrame:
     functions.udfs.resolve_one). Built with JVM columns — shipping a
     driver-materialized posting list through ``createDataFrame`` costs tens
     of seconds per job at 32 slices.
+
+    No resolve path reads it: the fused kernel builds its own postings
+    (``functions.udfs.build_resolver_state``). ``perfbench/job.py`` still
+    builds it and passes it to ``resolve_mentions``, which ignores it.
     """
     from pyspark.sql import functions as F
 
@@ -397,17 +398,3 @@ def ngram_index_df(nodes_df: DataFrame) -> DataFrame:
             F.array_contains("primary_grams", F.col("g")).alias("is_primary"),
         )
     )
-
-
-def ngram_index(nodes: Iterable[dict]) -> list[tuple[str, int, int, bool]]:
-    """Inverted postings ``(ngram, node_id, n_primary, is_primary)`` —
-    python twin of ``ngram_index_df`` (same semantics, see its docstring)."""
-    from address_parser_spark.textops.ngrams import char_ngram_set
-
-    postings: list[tuple[str, int, int, bool]] = []
-    for n in nodes:
-        primary = char_ngram_set(n["std_name"])
-        n_primary = len(primary)
-        for g in n["ngrams"]:
-            postings.append((g, n["node_id"], n_primary, g in primary))
-    return postings

@@ -1,8 +1,8 @@
 """The five-stage entity-resolution pipeline (SURVEY §7), resumable.
 
-pages → (1) extract+normalize → (2) resolve vs gazetteer (block/gate/score/
-argmax) → (3) blocking keys → (4) string-identity edges → (5) connected
-components → clusters.
+pages → (1) extract+normalize → (2) resolve vs the broadcast gazetteer (fused
+probe/gate/score/argmax/repair kernel) → (3) blocking keys → (4)
+string-identity edges → (5) connected components → clusters.
 
 Run standalone:
     spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py
@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from address_parser_spark.gazetteer.nodes import (
     alias_registries,
     build_nodes,
-    ngram_index_df,
     nodes_to_spark,
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
@@ -96,7 +95,6 @@ def run_pipeline(
 
     nodes = build_nodes(gaz)
     nodes_df = nodes_to_spark(spark, nodes)
-    index_df = ngram_index_df(nodes_df)
     registries = alias_registries(gaz)
     repair_state = build_repair_state(gaz, nodes)
 
@@ -134,7 +132,7 @@ def run_pipeline(
     resolved = stage(
         "resolved",
         lambda: resolve_mentions(
-            pages, nodes_df, index_df, registries,
+            pages, nodes_df, registries=registries,
             nodes=nodes, repair_state=repair_state,
         ),
     )

@@ -1,16 +1,20 @@
 """Every ``address_parser_spark`` name the entry points import must exist.
 
-The scripts, the job, the benchmark harnesses and the driver entry import
-library names lazily (inside functions, or inside child programs they embed
-as strings), so deleting a library function can strand a caller that no
-other test ever imports. This walks their ASTs — nested imports included —
-and resolves each imported name. Pure Python: no SparkSession, no JVM.
+The scripts, the job, the benchmark harnesses, the driver entry and the test
+modules import library names lazily (inside functions, or inside child
+programs they embed as strings), so deleting a library function can strand
+a caller that no other test ever imports — and a test module that fails to
+import only drops out of a ``--continue-on-collection-errors`` run. This
+walks their ASTs — nested imports included — and resolves each imported
+name, then checks that ``resolve_mentions`` still accepts every call shape
+the callers use. Pure Python: no SparkSession, no JVM.
 """
 
 from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 import re
 from pathlib import Path
 
@@ -20,7 +24,7 @@ ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = "address_parser_spark"
 CALLERS = sorted(
     [*ROOT.glob("scripts/*.py"), *ROOT.glob("jobs/*.py"), *ROOT.glob("perfbench/*.py"),
-     ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+     *ROOT.glob("tests/*.py"), ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 )
 # single-line ``from address_parser_spark... import a, b`` inside string
 # literals: the child programs the scaling scripts launch
@@ -75,3 +79,31 @@ def test_caller_imports_resolve(path):
             except ImportError:
                 missing.append(f"{module}.{name}")
     assert not missing, f"{path.relative_to(ROOT)} imports names that do not exist: {missing}"
+
+
+def _resolve_mentions_calls(path: Path) -> list[ast.Call]:
+    return [
+        node for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) == "resolve_mentions"
+    ]
+
+
+def test_resolve_mentions_accepts_every_caller_call_shape():
+    """A signature edit must not strand a caller: bind each call site's
+    positional count and keyword names — among them the benchmark job's
+    four positionals plus ``nodes=`` and ``repair_state=``."""
+    from address_parser_spark.operators.parse import resolve_mentions
+
+    sig = inspect.signature(resolve_mentions)
+    shapes: dict[tuple, set[str]] = {}
+    for path in [*CALLERS, *ROOT.glob(f"{PACKAGE}/**/*.py")]:
+        for call in _resolve_mentions_calls(path):
+            shape = (len(call.args), tuple(sorted(k.arg for k in call.keywords)))
+            shapes.setdefault(shape, set()).add(str(path.relative_to(ROOT)))
+    assert "perfbench/job.py" in shapes[(4, ("nodes", "repair_state"))]
+    for (n_args, kwargs), where in sorted(shapes.items()):
+        try:
+            sig.bind(*([None] * n_args), **dict.fromkeys(kwargs))
+        except TypeError as exc:
+            pytest.fail(f"resolve_mentions{sig} rejects the call in {sorted(where)}: {exc}")

@@ -133,7 +133,7 @@ def test_equality_edges_match_candidate_pair_route(spark, gaz):
     the cap boundary at both tested caps."""
     from address_parser_spark.operators.pairs import equality_edges, with_blocking_keys
     from address_parser_spark.gazetteer.nodes import (
-        alias_registries, build_nodes, build_repair_state, ngram_index_df, nodes_to_spark,
+        alias_registries, build_nodes, build_repair_state, nodes_to_spark,
     )
     from address_parser_spark.operators.parse import resolve_mentions
     from address_parser_spark.sources.pages import synth_pages_spark
@@ -142,7 +142,7 @@ def test_equality_edges_match_candidate_pair_route(spark, gaz):
     nodes_df = nodes_to_spark(spark, nodes)
     pages = synth_pages_spark(spark, gaz, 80, partitions=4)
     resolved = resolve_mentions(
-        pages, nodes_df, ngram_index_df(nodes_df), alias_registries(gaz),
+        pages, nodes_df, registries=alias_registries(gaz),
         nodes=nodes, repair_state=build_repair_state(gaz, nodes),
     )
     real = with_blocking_keys(resolved).localCheckpoint(eager=True)

@@ -276,7 +276,7 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real (stdlib) multimodal decode, round-trip proven: doc_id % 3 picks
     PNG / zlib-compressed-text / WAV, the payload is built with the module's
     encoders in a mapInPandas stage (real bytes, real containers), and
-    ``decode_media(decode_backend="real")`` parses the header fields back.
+    ``decode_media`` (the stdlib codecs) parses the header fields back.
     The oracle re-derives those fields arithmetically from doc_id/text — a
     mismatch means the parser did NOT recover what was encoded."""
     import pandas as pd
@@ -304,7 +304,7 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": b["doc_id"], "html": payloads})
 
     payloads = docs.mapInPandas(_encode, schema="doc_id long, html binary")
-    return decode_media(payloads, decode_backend="real").select(
+    return decode_media(payloads).select(
         "doc_id",
         F.col("media.media_type").alias("media_type"),
         F.col("media.format").alias("media_format"),

@@ -29,37 +29,43 @@ def normalize_basic_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda v: normalize_basic(v) if isinstance(v, str) else "")
 
 
-_REGISTRY_CACHE: dict[str, tuple] = {}
+# Worker-side cache of materialized broadcast states, keyed on a
+# DRIVER-GENERATED token inside the payload, not id(): a GC'd broadcast value
+# whose address is reused must not alias a stale state, and UDFs deserialized
+# together (text + html extract) must not thrash one another. cloudpickle
+# ships this dict by value with each UDF, so one copy lives as long as a
+# task's deserialized UDF — every Arrow batch of that task.
+_STATE_CACHE: dict[str, object] = {}
+_STATE_CACHE_CAP = 8
 
 
-def _registry_udf_payload(registries: dict, spark):
-    """(broadcast-or-local payload, getter) for alias-registry UDFs — token-
-    keyed worker cache, same rationale as the resolver cache."""
+def _broadcast_state(spark, state, materialize):
+    """Ship ``state`` to the executors in one broadcast; return a getter that
+    builds ``materialize(state)`` once per task and serves every later batch
+    from ``_STATE_CACHE``."""
     import uuid
 
-    from address_parser_spark.textops.detect import AliasRegistry
+    bc = spark.sparkContext.broadcast({"token": uuid.uuid4().hex, "state": state})
 
-    payload = {"token": uuid.uuid4().hex, "regs": registries}
-    bc = spark.sparkContext.broadcast(payload) if spark is not None else None
-    local = payload if bc is None else None
-
-    def _get_regs():
-        raw = bc.value if bc is not None else local
-        key = raw["token"]
-        hit = _REGISTRY_CACHE.get(key)
+    def get():
+        raw = bc.value
+        hit = _STATE_CACHE.get(raw["token"])
         if hit is None:
-            if len(_REGISTRY_CACHE) >= 4:
-                _REGISTRY_CACHE.clear()
-            regs = raw["regs"]
-            hit = (
-                AliasRegistry(regs["province"]),
-                AliasRegistry(regs["district"]),
-                AliasRegistry(regs["ward"]),
-            )
-            _REGISTRY_CACHE[key] = hit
+            if len(_STATE_CACHE) >= _STATE_CACHE_CAP:
+                _STATE_CACHE.clear()
+            hit = _STATE_CACHE[raw["token"]] = materialize(raw["state"])
         return hit
 
-    return _get_regs
+    return get
+
+
+def _alias_registries(regs: dict) -> tuple:
+    """Per-level prefix-detection matchers over ``alias_registries`` lists."""
+    from address_parser_spark.textops.detect import AliasRegistry
+
+    return (AliasRegistry(regs["province"]), AliasRegistry(regs["district"]),
+            AliasRegistry(regs["ward"]))
+
 
 _FEATURES_SCHEMA = T.ArrayType(
     T.StructType(
@@ -90,10 +96,10 @@ def partial_flag(std: str) -> bool:
     return bool(top5) and sum(c for _, c in top5) >= 12
 
 
-def make_extract_features_udf(registries: dict[str, list[str]], spark=None,
-                              from_html: bool = False):
-    """FUSED extraction + normalization (advanced & basic) + prefix detection
-    in a single Arrow node.
+def make_extract_features_udfs(registries: dict[str, list[str]], spark) -> tuple:
+    """(text UDF, html UDF): FUSED extraction + normalization (advanced &
+    basic) + prefix detection in a single Arrow node each, both reading the
+    alias registries from ONE broadcast.
 
     Chaining these as four separate pandas UDFs plants four ArrowEvalPython
     operators in ONE stage — every task then runs four python workers
@@ -101,7 +107,7 @@ def make_extract_features_udf(registries: dict[str, list[str]], spark=None,
     64-partition run spent ~25s spawning/importing ~128 workers). One fused
     UDF keeps it at one worker per task slot and one Arrow round-trip.
 
-    ``from_html=True`` prepends the markup→text extraction
+    The html UDF prepends the markup→text extraction
     (``textops.html.html_to_text``) to the same fused node, so the html-only
     branch of the page union ALSO plans exactly one ArrowEvalPython —
     chaining a separate html UDF in front re-created the two-workers-per-
@@ -112,34 +118,37 @@ def make_extract_features_udf(registries: dict[str, list[str]], spark=None,
     from address_parser_spark.textops.html import html_to_text
     from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
 
-    _get_regs = _registry_udf_payload(registries, spark)
+    get_regs = _broadcast_state(spark, registries, _alias_registries)
 
-    @pandas_udf(_FEATURES_SCHEMA)
-    def extract_features_udf(text: pd.Series) -> pd.Series:
-        reg_p, reg_d, reg_w = _get_regs()
-        det_cache: dict[str, tuple] = {}
+    def make(from_html: bool):
+        @pandas_udf(_FEATURES_SCHEMA)
+        def extract_features_udf(text: pd.Series) -> pd.Series:
+            reg_p, reg_d, reg_w = get_regs()
+            det_cache: dict[str, tuple] = {}
 
-        def run(t):
-            if from_html:
-                t = html_to_text(t)
-            if not isinstance(t, str) or not t:
-                return []
-            out = []
-            for mention in extract_mentions(t):
-                std = normalize_advanced(mention)
-                if len(std) < 2:
-                    continue
-                basic = normalize_basic(mention)
-                det = det_cache.get(basic)
-                if det is None:
-                    det = detect_by_prefix(basic, reg_p, reg_d, reg_w)
-                    det_cache[basic] = det
-                out.append((mention, std, basic) + det + (partial_flag(std),))
-            return out
+            def run(t):
+                if from_html:
+                    t = html_to_text(t)
+                if not isinstance(t, str) or not t:
+                    return []
+                out = []
+                for mention in extract_mentions(t):
+                    std = normalize_advanced(mention)
+                    if len(std) < 2:
+                        continue
+                    basic = normalize_basic(mention)
+                    det = det_cache.get(basic)
+                    if det is None:
+                        det = detect_by_prefix(basic, reg_p, reg_d, reg_w)
+                        det_cache[basic] = det
+                    out.append((mention, std, basic) + det + (partial_flag(std),))
+                return out
 
-        return text.map(run)
+            return text.map(run)
 
-    return extract_features_udf
+        return extract_features_udf
+
+    return make(False), make(True)
 
 
 def _component_boost(cand_std, detected, exact_bonus, fuzzy_bonus, missing_penalty):
@@ -310,36 +319,23 @@ RESOLVE_SCHEMA = T.StructType(
     ]
 )
 
-_RESOLVER_CACHE: dict[str, tuple] = {}
 _SCORE_MEMO_CAP = 2_000_000
 
 
-def build_resolver_state(nodes: list[dict]) -> dict:
-    """Driver-side: nodes → compact picklable resolve state: inverted gram
-    postings over the alias-union gram set (reference ``invert_ngrams_idx``),
-    per-node gram-set sizes (the reference's Dice denominator is the FULL
-    ``ngram_list``, inexus_parser.py:2824), per-node attribute tuples, and
-    the per-level alias→node invert maps used for detected-value validation
-    and the candidate-prioritization prefilter (:2836-2850)."""
-    from address_parser_spark.gazetteer.nodes import _augment_aliases
-    from address_parser_spark.textops.normalize import normalize_basic
-
+def build_resolver_state(nodes: list[dict], repair_state: dict) -> dict:
+    """Driver-side: the ONE picklable kernel state — ``repair_state``
+    (``gazetteer.nodes.build_repair_state``: the per-level alias→node invert
+    maps behind detected-value validation, the prioritization prefilter
+    (:2836-2850) and the repair cascade) plus inverted gram postings over the
+    alias-union gram set (reference ``invert_ngrams_idx``), per-node
+    primary gram-set sizes (the Dice denominator, see ``resolve_one``) and
+    per-node attribute tuples."""
     from address_parser_spark.textops.ngrams import char_ngram_set
 
     idx_all: dict[str, list[int]] = {}
     idx_primary: dict[str, list[int]] = {}
     n_primary: list[int] = []
     attrs: list[tuple] = []
-    inv: dict[str, dict[str, list[int]]] = {"province": {}, "district": {}, "ward": {}}
-
-    def register(level: str, aliases: list[str], node_id: int) -> None:
-        for alias in aliases:
-            std = normalize_basic(alias)
-            if std:
-                postings = inv[level].setdefault(std, [])
-                if not postings or postings[-1] != node_id:
-                    postings.append(node_id)
-
     for n in nodes:
         nid = n["node_id"]
         assert nid == len(attrs), "node_id must be dense and ordered"
@@ -349,15 +345,6 @@ def build_resolver_state(nodes: list[dict]) -> dict:
             idx_all.setdefault(g, []).append(nid)
             if g in primary:
                 idx_primary.setdefault(g, []).append(nid)
-        if n["province"]:
-            register("province",
-                     n.get("p_aliases") or _augment_aliases(n["province"], "province"), nid)
-        if n["district"]:
-            register("district",
-                     n.get("d_aliases") or _augment_aliases(n["district"], "district"), nid)
-        if n["ward"]:
-            register("ward",
-                     n.get("w_aliases") or _augment_aliases(n["ward"], "ward"), nid)
         attrs.append(
             (
                 n["level"], n["is_new"], n["province"], n["district"], n["ward"],
@@ -365,15 +352,17 @@ def build_resolver_state(nodes: list[dict]) -> dict:
                 n["p_std"], n["d_std"], n["w_std"], n["std_name"],
             )
         )
-    for level in inv:
-        for postings in inv[level].values():
-            postings.sort()
-    return {"idx_all": idx_all, "idx_primary": idx_primary,
-            "n_primary": n_primary, "attrs": attrs, "inv": inv}
+    return {**repair_state, "idx_all": idx_all, "idx_primary": idx_primary,
+            "n_primary": n_primary, "attrs": attrs}
 
 
-def make_resolve_udf(state: dict, spark=None, repair_state: dict | None = None):
-    """Fused resolve kernel over the broadcast gazetteer state.
+def _with_memos(st: dict) -> tuple:
+    """Worker-side: the kernel state plus the task's score and boost memos."""
+    return st, {}, {}
+
+
+def make_resolve_udf(state: dict, spark):
+    """Fused resolve kernel over the broadcast ``build_resolver_state``.
 
     Per distinct mention (reference ``process()``, minus prefix detection
     which rides in on the extract stage): counter probe of the inverted index
@@ -382,46 +371,21 @@ def make_resolve_udf(state: dict, spark=None, repair_state: dict | None = None):
     time — within-input gram multiplicity, :148-154), Dice ≥ 0.4 gate on
     primary grams (:2824-2827), 120-candidate
     score slice (:2878), blend + boosts (:2885-2912), lexicographic argmax
-    (:2926-2940), the component-repair cascade (:186-403, textops.repair —
-    when ``repair_state`` is provided), then street extraction on the
-    repaired components. Scores are memoized per worker process across
-    batches keyed on (std, cand_std, flag) — duplicate address strings across
-    the corpus pay once per worker."""
-    import uuid
-
-    # Cache key is a DRIVER-GENERATED token inside the payload, not id(): a
-    # GC'd broadcast value whose address is reused must not alias a stale
-    # resolver, and two alternating resolver UDFs in one worker must not
-    # thrash a single-entry cache.
-    payload = {"token": uuid.uuid4().hex, "resolve": state, "repair": repair_state}
-    bc = spark.sparkContext.broadcast(payload) if spark is not None else None
-    local = payload if bc is None else None
-
-    def _get_state():
-        raw = bc.value if bc is not None else local
-        key = raw["token"]
-        hit = _RESOLVER_CACHE.get(key)
-        if hit is None:
-            if len(_RESOLVER_CACHE) >= 4:
-                _RESOLVER_CACHE.clear()
-            r = raw["resolve"]
-            hit = (r["idx_all"], r["idx_primary"], r["n_primary"], r["attrs"], r["inv"],
-                   raw["repair"], {}, {})
-            _RESOLVER_CACHE[key] = hit
-        return hit
+    (:2926-2940), the component-repair cascade (:186-403, textops.repair),
+    then street extraction on the repaired components. Scores are memoized
+    across a task's batches keyed on (std, cand_std, flag) — duplicate
+    address strings in a partition pay once (the std repartition upstream
+    co-locates them)."""
+    get_state = _broadcast_state(spark, state, _with_memos)
 
     @pandas_udf(RESOLVE_SCHEMA)
     def resolve_udf(
         mention: pd.Series, std: pd.Series, std_basic: pd.Series, grams: pd.Series,
         det_p: pd.Series, det_d: pd.Series, det_w: pd.Series, partial: pd.Series,
     ) -> pd.DataFrame:
-        idx_all, idx_primary, n_primary, attrs, inv, rep_st, score_memo, boost_memo = _get_state()
+        st, score_memo, boost_memo = get_state()
         rows = [
-            resolve_one(
-                idx_all, idx_primary, n_primary, attrs, inv, rep_st,
-                score_memo, boost_memo,
-                m, s, sb, gs, dp, dd, dw, bool(pf),
-            )
+            resolve_one(st, score_memo, boost_memo, m, s, sb, gs, dp, dd, dw, bool(pf))
             for m, s, sb, gs, dp, dd, dw, pf in zip(
                 mention, std, std_basic, grams, det_p, det_d, det_w, partial
             )
@@ -434,7 +398,7 @@ def make_resolve_udf(state: dict, spark=None, repair_state: dict | None = None):
 _NONE_ROW = (None,) * 15
 
 
-def _infer_format(rep_st: dict, district, w_code, p_code):
+def _infer_format(st: dict, district, w_code, p_code):
     """Format tag for a repair-only resolution (no winner node): derived from
     the code system so the entity_key matches sibling mentions that resolved a
     node. 3-level (district present) → old; ward code → catalog membership;
@@ -442,20 +406,21 @@ def _infer_format(rep_st: dict, district, w_code, p_code):
     if district:
         return False
     if w_code:
-        return w_code in rep_st.get("new_ward_codes", ())
+        return w_code in st["new_ward_codes"]
     if p_code:
-        return p_code in rep_st.get("new_province_codes", ())
+        return p_code in st["new_province_codes"]
     return None
 
 
-def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
-                score_memo, boost_memo,
-                m, s, sb, gs, dp, dd, dw, partial_input: bool = False) -> tuple:
+def resolve_one(st, score_memo, boost_memo,
+                m, s, sb, gs, dp, dd, dw, partial_input: bool) -> tuple:
     """One mention through probe → cap → gate → prioritize → score → argmax →
     repair → street. Pure function shared by the Arrow kernel and
     ``LocalParser`` (plans.local_parser); returns a RESOLVE_SCHEMA-shaped
-    tuple. Mirrors the reference ``address_candidate_list``
-    (inexus_parser.py:2796-2941): duplicate-counting candidate ranking, early
+    tuple. ``st`` is ``build_resolver_state``'s dict; the two memos are the
+    caller's, pure functions of their keys. Mirrors the reference
+    ``address_candidate_list`` (inexus_parser.py:2796-2941):
+    duplicate-counting candidate ranking, early
     break at the first failing candidate past position 200, detected-component
     prefilter reordering before the 120-candidate score slice. DELIBERATE
     DEVIATION: the Dice gate runs over PRIMARY-form grams (std_name) rather
@@ -470,6 +435,9 @@ def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
 
     if not isinstance(s, str) or gs is None or not len(gs):
         return _NONE_ROW
+    idx_all, idx_primary, n_primary, attrs, inv = (
+        st["idx_all"], st["idx_primary"], st["n_primary"], st["attrs"], st["inv"]
+    )
     # detected values must exist as alias keys at their level (the
     # reference's detected-value validation, :1900-1905)
     dp = dp if dp and dp in inv["province"] else None
@@ -522,7 +490,7 @@ def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
         if prioritized:
             filtered = prioritized + [e for e in filtered if e[0] not in pf]
 
-    best = None
+    best = (None,) * 13  # no winner: the repair cascade may still resolve
     best_key = None
     for nid, dice in filtered[:SCORE_CANDIDATES]:
         (level, is_new, province, district, ward, p_code, d_code, w_code,
@@ -567,24 +535,19 @@ def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
             best_key = key
             best = (nid, level, is_new, province, district, ward,
                     p_code, d_code, w_code, cand_std, final, combined, dice)
-    if best is None:
-        if rep_st is None:
-            return _NONE_ROW
-        best = (None,) * 13
 
     nid, level, is_new, province, district, ward, p_code, d_code, w_code, \
         cand_std, final, combined, dice = best
-    if rep_st is not None:
-        province, district, ward, p_code, d_code, w_code = repair_components(
-            rep_st, province or "", district or "", ward or "",
-            dp, dd, dw, sb if isinstance(sb, str) else "",
-            p_code, d_code, w_code, is_new=is_new,
-        )
-        province, district, ward = province or None, district or None, ward or None
-        if nid is None and not (province or district or ward):
+    province, district, ward, p_code, d_code, w_code = repair_components(
+        st, province or "", district or "", ward or "",
+        dp, dd, dw, sb if isinstance(sb, str) else "",
+        p_code, d_code, w_code, is_new=is_new,
+    )
+    province, district, ward = province or None, district or None, ward or None
+    if nid is None:
+        if not (province or district or ward):
             return _NONE_ROW
-        if nid is None:
-            is_new = _infer_format(rep_st, district, w_code, p_code)
+        is_new = _infer_format(st, district, w_code, p_code)
     street, entity_std = _street_and_entity(
         m if isinstance(m, str) else "", s, province, district, ward, is_new
     )

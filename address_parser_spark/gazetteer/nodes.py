@@ -239,7 +239,10 @@ def alias_registries(gaz: Gazetteer) -> dict[str, list[str]]:
 
 
 def build_repair_state(gaz: Gazetteer, nodes: list[dict]) -> dict:
-    """Picklable state for the component-repair cascade (textops.repair):
+    """Picklable state for the component-repair cascade (textops.repair),
+    and the base of the resolve kernel's one state
+    (``functions.udfs.build_resolver_state`` adds the gram postings and node
+    attributes to it):
 
     - per-level alias→node-id invert maps over the AUGMENTED alias sets
       (reference ``_register_node_aliases`` + ``_augment_aliases``,
@@ -375,9 +378,10 @@ def ngram_index_df(nodes_df: DataFrame) -> DataFrame:
     driver-materialized posting list through ``createDataFrame`` costs tens
     of seconds per job at 32 slices.
 
-    No resolve path reads it: the fused kernel builds its own postings
-    (``functions.udfs.build_resolver_state``). ``perfbench/job.py`` still
-    builds it and passes it to ``resolve_mentions``, which ignores it.
+    No resolve path reads it: the fused kernel's postings live in
+    ``functions.udfs.build_resolver_state``, on top of
+    ``build_repair_state``'s invert maps. ``perfbench/job.py`` still builds
+    it and passes it to ``resolve_mentions``, which ignores it.
     """
     from pyspark.sql import functions as F
 

@@ -4,24 +4,19 @@ Training-data pipelines carry image/audio/video as ``binary`` columns with a
 metadata struct; compute-heavy decode/feature steps run as Arrow-batched
 ``mapInPandas`` so each executor processes whole record batches.
 
-Two decode backends, selected per call:
-
-- ``decode_backend="real"`` — a stdlib-only codec layer: container header
-  parsing for PNG / GIF / JPEG / BMP (dimensions) and RIFF-WAVE (sample rate,
-  frame count), and compressed-text payload decode (gzip / zlib / plain
-  UTF-8).  This covers the metadata a 100 TB curation pipeline actually
-  filters on (dimensions, duration, format, text length) without any
-  third-party codec.  Full pixel/sample decode (Pillow/ffmpeg-class work)
-  still needs an external library; ``_parse_*`` below are the plug points.
-- ``decode_backend="fake"`` — a deterministic hash-derived decode used by
-  plumbing/determinism tests: output depends only on payload bytes, never on
-  partitioning or environment.
+The decoder is a stdlib-only codec layer: container header parsing for
+PNG / GIF / JPEG / BMP (dimensions) and RIFF-WAVE (sample rate, frame count),
+and compressed-text payload decode (gzip / zlib / plain UTF-8). This covers
+the metadata a 100 TB curation pipeline actually filters on (dimensions,
+duration, format, text length) without any third-party codec. Full
+pixel/sample decode (Pillow/ffmpeg-class work) still needs an external
+library; ``_parse_*`` below are the plug points. Output depends only on the
+payload bytes, never on partitioning or environment.
 """
 
 from __future__ import annotations
 
 import gzip
-import hashlib
 import struct
 import zlib
 from typing import Iterator, Optional
@@ -33,7 +28,7 @@ from pyspark.sql import types as T
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("media_type", T.StringType()),   # image | audio | video | text | unknown
-        T.StructField("format", T.StringType()),       # png | gif | jpeg | bmp | wav | gzip | zlib | utf-8 | fake
+        T.StructField("format", T.StringType()),       # png | gif | jpeg | bmp | wav | gzip | zlib | utf-8
         T.StructField("width", T.IntegerType()),
         T.StructField("height", T.IntegerType()),
         T.StructField("n_frames", T.IntegerType()),
@@ -46,22 +41,6 @@ MEDIA_META_SCHEMA = T.StructType(
 _META_KEYS = [f.name for f in MEDIA_META_SCHEMA.fields]
 
 FEATURE_DIM = 16
-
-
-def _fake_decode(payload: bytes) -> dict:
-    """Deterministic stand-in decode: dimensions derived from a content hash
-    (stable across partitionings / reruns)."""
-    digest = hashlib.md5(payload or b"").digest()
-    return {
-        "media_type": ("image", "audio", "video")[digest[0] % 3],
-        "format": "fake",
-        "width": 64 + digest[1] % 192,
-        "height": 64 + digest[2] % 192,
-        "n_frames": 1 + digest[3] % 64,
-        "sample_rate": 8000 + (digest[4] % 5) * 8000,
-        "text_chars": None,
-        "n_bytes": len(payload or b""),
-    }
 
 
 # --------------------------------------------------------------------------
@@ -201,28 +180,15 @@ def _real_decode(payload: bytes) -> dict:
     return {k: meta.get(k) for k in _META_KEYS}
 
 
-_DECODERS = {"fake": _fake_decode, "real": _real_decode}
-
-
-def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    digest = hashlib.sha256(payload or b"").digest()
-    return [round((digest[i % 32] - 128) / 128.0, 6) for i in range(dim)]
-
-
-def decode_media(df: DataFrame, binary_col: str = "html",
-                 decode_backend: str = "fake") -> DataFrame:
-    """binary → typed metadata struct, Arrow-batched (mapInPandas keeps the
-    byte payloads inside the worker; no per-row Python UDF).
-
-    ``decode_backend="real"`` uses the stdlib header/text codecs above;
-    ``"fake"`` is the hash-derived deterministic stand-in."""
-    decode = _DECODERS[decode_backend]
-
+def decode_media(df: DataFrame, binary_col: str = "html") -> DataFrame:
+    """binary → typed metadata struct via the stdlib header/text codecs
+    above, Arrow-batched (mapInPandas keeps the byte payloads inside the
+    worker; no per-row Python UDF)."""
     out_schema = T.StructType(df.schema.fields + [T.StructField("media", MEDIA_META_SCHEMA)])
 
     def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            metas = [decode(bytes(p) if p is not None else b"") for p in batch[binary_col]]
+            metas = [_real_decode(bytes(p) if p is not None else b"") for p in batch[binary_col]]
             batch = batch.copy()
             batch["media"] = [tuple(m[k] for k in _META_KEYS) for m in metas]
             yield batch
@@ -247,11 +213,9 @@ def _real_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
 
 
 def extract_media_features(df: DataFrame, binary_col: str = "html",
-                           key_cols: list[str] | None = None,
-                           decode_backend: str = "fake") -> DataFrame:
+                           key_cols: list[str] | None = None) -> DataFrame:
     """binary → fixed-dim float feature vector (the embedding-extraction
     shape: batched kernel, narrow output, key columns carried through)."""
-    featurize = _real_features if decode_backend == "real" else _fake_features
     keys = key_cols or ["url"]
     out_schema = T.StructType(
         [df.schema[k] for k in keys]
@@ -262,7 +226,7 @@ def extract_media_features(df: DataFrame, binary_col: str = "html",
         for batch in batches:
             out = batch[keys].copy()
             out["features"] = [
-                featurize(bytes(p) if p is not None else b"")
+                _real_features(bytes(p) if p is not None else b"")
                 for p in batch[binary_col]
             ]
             yield out

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Observation, functions as F
 from address_parser_spark.functions.columns import char_ngrams_col
 from address_parser_spark.functions.udfs import (
     build_resolver_state,
-    make_extract_features_udf,
+    make_extract_features_udfs,
     make_resolve_udf,
 )
 
@@ -50,7 +50,8 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
 
     When the frame carries an ``html`` column, pages whose ``text`` is
     null/empty take a branch whose fused UDF FIRST extracts text from the
-    markup (``make_extract_features_udf(from_html=True)``). Deliberately a
+    markup (the html UDF of ``make_extract_features_udfs``; both UDFs read
+    the alias registries from one broadcast). Deliberately a
     filtered two-branch union, NOT ``when(need, udf(html))``: Catalyst
     extracts Python UDFs out of CASE branches into an unconditional
     ArrowEvalPython projection, so the ``when`` shape would ship EVERY
@@ -61,13 +62,10 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
     of pure overhead at the 1200-page bench even when the miss branch was
     empty)."""
     regs = registries or {"province": [], "district": [], "ward": []}
-    features = make_extract_features_udf(regs, spark=pages.sparkSession)
+    features, features_html = make_extract_features_udfs(regs, pages.sparkSession)
     base = pages.filter(F.col("lang") == lang)
     carry = list(carry_cols or [])
     if html_col in pages.columns:
-        features_html = make_extract_features_udf(
-            regs, spark=pages.sparkSession, from_html=True
-        )
         need = F.col("text").isNull() | (F.col("text") == "")
         exploded = (
             base.filter(~need)
@@ -140,7 +138,8 @@ def resolve_mentions(
     index_df: DataFrame | None = None,
     registries: dict[str, list[str]] | None = None,
     nodes: list[dict] | None = None,
-    repair_state: dict | None = None,
+    *,
+    repair_state: dict,
 ) -> DataFrame:
     """Full extract → dedup → fused resolve kernel pipeline; winners joined
     back onto the (url, mention) fact rows.
@@ -157,7 +156,9 @@ def resolve_mentions(
     mention probes it map-side (functions.udfs.make_resolve_udf). Zero
     shuffles between extraction and the fact join — the shape SURVEY §3.2
     calls "embarrassingly parallel". ``nodes`` (the driver-side node dicts)
-    skips re-collecting ``nodes_df`` when the caller already holds them.
+    skips re-collecting ``nodes_df`` when the caller already holds them;
+    ``repair_state`` (``gazetteer.nodes.build_repair_state``) is the base the
+    kernel state is built on.
 
     ``index_df`` is ignored: the kernel builds its own postings from
     ``nodes``. The positional slot stays only because ``perfbench/job.py``
@@ -190,14 +191,12 @@ def resolve_mentions(
     if nodes is None:
         nodes = [r.asDict() for r in nodes_df.collect()]
 
-    resolve = make_resolve_udf(
-        build_resolver_state(nodes), spark=spark, repair_state=repair_state
-    )
+    resolve = make_resolve_udf(build_resolver_state(nodes, repair_state), spark)
     winners = (
         uniq
         # Distinct mentions sharing a normalized std (street-level variants
         # of one entity) score against the same candidates; the kernel
-        # memoizes (std, cand_std) per worker process, so co-locating equal
+        # memoizes (std, cand_std) per task, so co-locating equal
         # stds makes the memo hit rate match a global memo (measured
         # 1.75×→~6× effective speedup at 8 workers). EXPLICIT partition
         # count: this stage is python-CPU-bound but tiny in bytes — AQE's

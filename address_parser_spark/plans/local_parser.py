@@ -25,21 +25,11 @@ class LocalParser:
     """process(text) → the reference's result dict shape (names + codes)."""
 
     def __init__(self, gaz: Gazetteer):
-        from address_parser_spark.functions.udfs import build_resolver_state
-        from address_parser_spark.textops.detect import AliasRegistry
+        from address_parser_spark.functions.udfs import _alias_registries, build_resolver_state
 
         nodes = build_nodes(gaz)
-        state = build_resolver_state(nodes)
-        self._idx_all = state["idx_all"]
-        self._idx_primary = state["idx_primary"]
-        self._n_primary = state["n_primary"]
-        self._attrs = state["attrs"]
-        self._inv = state["inv"]
-        self._repair = build_repair_state(gaz, nodes)
-        regs = alias_registries(gaz)
-        self._reg_p = AliasRegistry(regs["province"])
-        self._reg_d = AliasRegistry(regs["district"])
-        self._reg_w = AliasRegistry(regs["ward"])
+        self._state = build_resolver_state(nodes, build_repair_state(gaz, nodes))
+        self._reg_p, self._reg_d, self._reg_w = _alias_registries(alias_registries(gaz))
         self._score_memo: dict = {}
         self._boost_memo: dict = {}
 
@@ -56,8 +46,7 @@ class LocalParser:
         from address_parser_spark.functions.udfs import partial_flag
 
         row = resolve_one(
-            self._idx_all, self._idx_primary, self._n_primary, self._attrs, self._inv,
-            self._repair, self._score_memo, self._boost_memo,
+            self._state, self._score_memo, self._boost_memo,
             text, std, basic, grams, det_p, det_d, det_w, partial_flag(std),
         )
         (nid, level, is_new, province, district, ward,

@@ -98,7 +98,7 @@ def run_pipeline(
     registries = alias_registries(gaz)
     repair_state = build_repair_state(gaz, nodes)
 
-    def stage(name: str, build, partition_by=None, multi_consumer: bool = True) -> DataFrame:
+    def stage(name: str, build, multi_consumer: bool = True) -> DataFrame:
         """Materialize each multi-consumer stage exactly once: durable
         snapshot when a store is attached, else in-memory persist —
         ``resolved`` feeds three downstream branches (keys, anchors, final
@@ -122,7 +122,7 @@ def run_pipeline(
             # AQE-dependent variance. The eager barrier costs one job of
             # straggler idle time; the duplicate compute costs minutes.
             return build().localCheckpoint(eager=True)
-        return store.run_stage(name, build, partition_by=partition_by)
+        return store.run_stage(name, build)
 
     # html:binary intake (BASELINE.json input_hint) is handled INSIDE
     # extract_normalize: pages whose text column is null/empty take a

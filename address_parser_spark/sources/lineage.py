@@ -51,7 +51,7 @@ class StageStore:
         return [json.loads(line) for line in self.lineage_path.read_text().splitlines() if line]
 
     # ------------------------------------------------------------------
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> DataFrame:
+    def write(self, df: DataFrame, name: str) -> DataFrame:
         """Write a stage snapshot + lineage record; return the re-read frame
         (reading back truncates lineage like a checkpoint and lets AQE size
         downstream stages from real file statistics)."""
@@ -59,10 +59,7 @@ class StageStore:
         obs = Observation(f"lineage_{name}")
         observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         start = time.monotonic()
-        writer = observed.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(out))
+        observed.write.mode("overwrite").parquet(str(out))
         wall_ms = int((time.monotonic() - start) * 1000)
         files = [
             {"file": p.name, "bytes": p.stat().st_size}
@@ -81,15 +78,9 @@ class StageStore:
         )
         return self.read(name)
 
-    def run_stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        partition_by: list[str] | None = None,
-        force: bool = False,
-    ) -> DataFrame:
+    def run_stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Resume-aware stage execution: committed snapshots are read back."""
-        if not force and self.is_committed(name):
+        if self.is_committed(name):
             self._record({"stage": name, "resumed": True, "committed_at": time.time()})
             return self.read(name)
-        return self.write(build(), name, partition_by=partition_by)
+        return self.write(build(), name)

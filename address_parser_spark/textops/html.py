@@ -21,10 +21,11 @@ Extraction rules (applied in order, all deterministic):
    are stripped, empty lines dropped, lines joined with ``\n``.
 
 The function is pure Python (stdlib only) and runs Arrow-batched inside the
-fused extraction UDF (``functions.udfs.make_extract_features_udf(
-from_html=True)``) — entity decoding over the full HTML5 named-reference
-table is not expressible with JVM builtins, so this is a genuine UDF case;
-the batch path keeps it off the per-row interpreter.
+fused extraction UDF (the html UDF of
+``functions.udfs.make_extract_features_udfs``) — entity decoding over the
+full HTML5 named-reference table is not expressible with JVM builtins, so
+this is a genuine UDF case; the batch path keeps it off the per-row
+interpreter.
 """
 
 from __future__ import annotations

@@ -76,3 +76,16 @@ def test_rounds_bound_on_long_chain(spark):
     comp = {r["id"]: r["component"] for r in rows}
     assert all(comp[i] == 0 for i in range(n))
     assert 1 <= timings["cc_rounds"] <= 2 * int(math.log2(n)), timings
+
+
+def test_round_cap_without_fixpoint_raises(spark, monkeypatch):
+    """Hitting ``MAX_ITERATIONS`` without a fixpoint must fail loudly: the
+    edge set mid-contraction is not a component assignment (a 1024-node
+    chain needs several rounds, so a cap of one cannot converge)."""
+    from address_parser_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "MAX_ITERATIONS", 1)
+    n = 1024
+    df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+    with pytest.raises(RuntimeError, match=r"did not converge in 1 rounds \(\d+ canonical edges"):
+        connected_components(df, small_graph_edges=0)

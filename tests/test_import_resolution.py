@@ -6,8 +6,8 @@ programs they embed as strings), so deleting a library function can strand
 a caller that no other test ever imports — and a test module that fails to
 import only drops out of a ``--continue-on-collection-errors`` run. This
 walks their ASTs — nested imports included — and resolves each imported
-name, then checks that ``resolve_mentions`` still accepts every call shape
-the callers use. Pure Python: no SparkSession, no JVM.
+name, then checks that every package function they call still accepts
+each call shape they use. Pure Python: no SparkSession, no JVM.
 """
 
 from __future__ import annotations
@@ -81,29 +81,55 @@ def test_caller_imports_resolve(path):
     assert not missing, f"{path.relative_to(ROOT)} imports names that do not exist: {missing}"
 
 
-def _resolve_mentions_calls(path: Path) -> list[ast.Call]:
+def _call_shapes(path: Path) -> list[tuple[str, str, int, tuple[str, ...], int]]:
+    """(module, name, positional count, keyword names, line) for each call of
+    a name the file imports ``from`` the package. Calls spreading ``*args``
+    or ``**kwargs`` have no static shape and are left out."""
+    tree = ast.parse(path.read_text(), str(path))
+    imported = {
+        a.asname or a.name: (node.module, a.name)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.level == 0 and node.module
+        and node.module.split(".")[0] == PACKAGE
+        for a in node.names
+    }
     return [
-        node for node in ast.walk(ast.parse(path.read_text(), str(path)))
-        if isinstance(node, ast.Call)
-        and getattr(node.func, "id", getattr(node.func, "attr", None)) == "resolve_mentions"
+        (*imported[node.func.id], len(node.args),
+         tuple(sorted(k.arg for k in node.keywords)), node.lineno)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+        and node.func.id in imported
+        and not any(isinstance(a, ast.Starred) for a in node.args)
+        and all(k.arg is not None for k in node.keywords)
     ]
 
 
-def test_resolve_mentions_accepts_every_caller_call_shape():
-    """A signature edit must not strand a caller: bind each call site's
-    positional count and keyword names — among them the benchmark job's
-    four positionals plus ``nodes=`` and ``repair_state=``."""
-    from address_parser_spark.operators.parse import resolve_mentions
-
-    sig = inspect.signature(resolve_mentions)
+def test_every_caller_call_shape_binds():
+    """A signature edit must not strand a caller: for every package callable
+    a caller (or the library itself) imports, bind each call site's
+    positional count and keyword names to its signature — among them the
+    benchmark job's ``build_repair_state(gaz, nodes)``,
+    ``extract_normalize(pages, registries)`` and ``resolve_mentions``' four
+    positionals plus ``nodes=`` and ``repair_state=``."""
     shapes: dict[tuple, set[str]] = {}
     for path in [*CALLERS, *ROOT.glob(f"{PACKAGE}/**/*.py")]:
-        for call in _resolve_mentions_calls(path):
-            shape = (len(call.args), tuple(sorted(k.arg for k in call.keywords)))
-            shapes.setdefault(shape, set()).add(str(path.relative_to(ROOT)))
-    assert "perfbench/job.py" in shapes[(4, ("nodes", "repair_state"))]
-    for (n_args, kwargs), where in sorted(shapes.items()):
+        for module, name, n_args, kwargs, line in _call_shapes(path):
+            where = f"{path.relative_to(ROOT)}:{line}"
+            shapes.setdefault((module, name, n_args, kwargs), set()).add(where)
+    job = {(m.rsplit(".", 1)[-1], n, a, k) for (m, n, a, k), w in shapes.items()
+           if any(x.startswith("perfbench/job.py:") for x in w)}
+    assert {("nodes", "build_repair_state", 2, ()), ("parse", "extract_normalize", 2, ()),
+            ("parse", "resolve_mentions", 4, ("nodes", "repair_state"))} <= job
+    failures, checked = [], 0
+    for (module, name, n_args, kwargs), where in sorted(shapes.items()):
+        obj = getattr(importlib.import_module(module), name, None)
+        if not callable(obj):  # ``from pkg import submodule``
+            continue
+        sig = inspect.signature(obj)
+        checked += 1
         try:
             sig.bind(*([None] * n_args), **dict.fromkeys(kwargs))
         except TypeError as exc:
-            pytest.fail(f"resolve_mentions{sig} rejects the call in {sorted(where)}: {exc}")
+            failures.append(f"{module}.{name}{sig} rejects the call at {sorted(where)}: {exc}")
+    assert checked > 100
+    assert not failures, "\n".join(failures)

@@ -27,8 +27,7 @@ N_PAGES = 40
 @pytest.fixture(scope="module")
 def kernel(gaz):
     nodes = build_nodes(gaz)
-    state = build_resolver_state(nodes)
-    repair = build_repair_state(gaz, nodes)
+    state = build_resolver_state(nodes, build_repair_state(gaz, nodes))
     _, golds = synth_pages_local(gaz, N_PAGES)
     mentions = sorted({g[1] for g in golds})
     assert len(mentions) >= 20
@@ -39,8 +38,7 @@ def kernel(gaz):
     def row(mention: str, det: tuple) -> tuple:
         std = normalize_advanced(mention)
         return resolve_one(
-            state["idx_all"], state["idx_primary"], state["n_primary"], state["attrs"],
-            state["inv"], repair, score_memo, boost_memo,
+            state, score_memo, boost_memo,
             mention, std, normalize_basic(mention), char_ngrams(std), *det,
             partial_flag(std),
         )

@@ -81,12 +81,15 @@ def test_multimodal_decode_and_features(spark, gaz):
     decoded = decode_media(df)
     rows = decoded.select("url", "media.*").collect()
     assert len(rows) == 20
-    assert all(r["n_bytes"] > 0 and r["media_type"] in ("image", "audio", "video") for r in rows)
+    # the synthetic pages carry plain UTF-8 markup
+    assert all(
+        r["n_bytes"] > 0 and r["media_type"] == "text" and r["format"] == "utf-8"
+        and r["text_chars"] > 0
+        for r in rows
+    )
     # determinism across partitionings
-    again = decode_media(df.repartition(7)).select("url", "media.n_frames").collect()
-    assert {(r["url"], r["n_frames"]) for r in again} == {
-        (r2["url"], r2["n_frames"]) for r2 in decoded.select("url", "media.n_frames").collect()
-    }
+    again = decode_media(df.repartition(7)).select("url", "media.*").collect()
+    assert {tuple(r) for r in again} == {tuple(r) for r in rows}
 
     feats = extract_media_features(df).collect()
     assert all(len(r["features"]) == 16 for r in feats)
@@ -132,8 +135,8 @@ _MEDIA_FIXTURES = {
 
 
 def test_real_decode_on_committed_binaries(spark):
-    """decode_backend="real" parses actual committed container binaries
-    through the Spark operator (not just the pure function)."""
+    """decode_media parses actual committed container binaries through the
+    Spark operator (not just the pure function)."""
     import hashlib
     import pathlib
 
@@ -149,7 +152,7 @@ def test_real_decode_on_committed_binaries(spark):
 
     got = {
         r["name"]: r.asDict()
-        for r in decode_media(df, decode_backend="real").select("name", "media.*").collect()
+        for r in decode_media(df).select("name", "media.*").collect()
     }
     assert len(got) == len(_MEDIA_FIXTURES)
     for name, (_sha, want) in _MEDIA_FIXTURES.items():
@@ -159,7 +162,7 @@ def test_real_decode_on_committed_binaries(spark):
 
     # corrupt payload → unknown, never an exception
     junk = spark.createDataFrame([("junk", b"\x00\x01\xfe\xff")], "name string, html binary")
-    r = decode_media(junk, decode_backend="real").select("media.*").collect()[0]
+    r = decode_media(junk).select("media.*").collect()[0]
     assert r["media_type"] == "unknown" and r["n_bytes"] == 4
 
 
@@ -170,7 +173,7 @@ def test_real_features_byte_histogram(spark):
         [("u1", b"\x00" * 8), ("u2", bytes(range(256)))], "url string, html binary"
     )
     feats = {r["url"]: r["features"] for r in
-             extract_media_features(df, decode_backend="real").collect()}
+             extract_media_features(df).collect()}
     assert feats["u1"][0] == 1.0 and sum(feats["u1"]) == 1.0
     assert all(abs(v - 1 / 16) < 1e-6 for v in feats["u2"])
 

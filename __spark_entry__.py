@@ -132,8 +132,8 @@ def q_top_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming-shaped event-time operators (batch equivalents of the Structured
-# Streaming ops; the streaming module reuses the same column logic)
+# Event-time operators: tumbling windows, sessionization and dedup, written
+# as batch queries over the events table
 # ---------------------------------------------------------------------------
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:

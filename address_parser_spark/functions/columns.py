@@ -16,21 +16,26 @@ from pyspark.sql import functions as F
 # bigint arithmetic (no overflow, no try_* fallbacks).
 MINHASH_PRIME = 2147483647
 
+# MinHash-LSH banding of the blocking keys: 10 bands × 3 rows, parameters
+# drawn from a fixed seed so band keys are stable across runs.
+LSH_BANDS, LSH_ROWS, LSH_SEED = 10, 3, 7
 
-def char_ngrams_col(col: Column, n: int = 4, distinct: bool = True) -> Column:
-    """Padded char n-gram windows of a (already normalized) string column.
 
-    Equivalent to ``char_ngrams`` in textops: pad one space each side, slide a
-    width-``n`` window. Strings whose padded form is shorter than ``n`` yield
-    an empty array (parity with the reference's ``generate_ngrams``).
+def char_ngrams_col(col: Column) -> Column:
+    """Distinct padded char 4-gram windows of a (already normalized) string
+    column.
+
+    Equivalent to ``char_ngram_set`` in textops: pad one space each side,
+    slide a width-4 window. Strings whose padded form is shorter than 4
+    yield an empty array (parity with the reference's ``generate_ngrams``).
     """
     padded = F.concat(F.lit(" "), col, F.lit(" "))
-    n_windows = F.length(padded) - F.lit(n - 1)
+    n_windows = F.length(padded) - F.lit(3)
     grams = F.when(
         n_windows >= 1,
-        F.transform(F.sequence(F.lit(1), n_windows), lambda i: padded.substr(i, F.lit(n))),
+        F.transform(F.sequence(F.lit(1), n_windows), lambda i: padded.substr(i, F.lit(4))),
     ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams) if distinct else grams
+    return F.array_distinct(grams)
 
 
 def gram_hash_col(grams: Column) -> Column:
@@ -44,18 +49,17 @@ def gram_hash_col(grams: Column) -> Column:
     return F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit(MINHASH_PRIME)))
 
 
-def lsh_band_keys_from_hashes(ghash: Column, bands: int = 10, rows: int = 3,
-                              seed: int = 7) -> Column:
+def lsh_band_keys_from_hashes(ghash: Column) -> Column:
     """Band keys from pre-hashed shingles (``gram_hash_col`` output, ideally a
     materialized column — see its docstring). Per band×row the work is one
     multiply-add-mod pass over the hash array; no string hashing, no shingle
     re-generation."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(LSH_SEED)
     params = [
         (rng.randrange(1, MINHASH_PRIME), rng.randrange(0, MINHASH_PRIME))
-        for _ in range(bands * rows)
+        for _ in range(LSH_BANDS * LSH_ROWS)
     ]
 
     def _minhash(a: int, b: int) -> Column:
@@ -70,9 +74,9 @@ def lsh_band_keys_from_hashes(ghash: Column, bands: int = 10, rows: int = 3,
         )
 
     band_keys = []
-    for band in range(bands):
+    for band in range(LSH_BANDS):
         parts = [
-            _minhash(*params[band * rows + r]).cast("string") for r in range(rows)
+            _minhash(*params[band * LSH_ROWS + r]).cast("string") for r in range(LSH_ROWS)
         ]
         band_keys.append(
             F.concat_ws("#", F.lit(str(band)), F.xxhash64(F.concat_ws(",", *parts)).cast("string"))

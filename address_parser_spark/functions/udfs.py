@@ -15,18 +15,12 @@ import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from address_parser_spark.textops.normalize import normalize_basic
 from address_parser_spark.textops.similarity import (
     indel_ratio,
     partial_ratio,
     wratio,
 )
 from address_parser_spark.textops.street import extract_street
-
-
-@pandas_udf(T.StringType())
-def normalize_basic_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: normalize_basic(v) if isinstance(v, str) else "")
 
 
 # Worker-side cache of materialized broadcast states, keyed on a

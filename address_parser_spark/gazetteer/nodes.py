@@ -23,7 +23,7 @@ what matters, and it ships to executors as a broadcast DataFrame.
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T

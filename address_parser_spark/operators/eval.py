@@ -21,11 +21,13 @@ def gold_entity_col() -> F.Column:
     )
 
 
-def labeled_pairs(
-    keyed_with_labels: DataFrame,
-    max_block: int = 1 << 20,
-    max_gold_entity: int = 256,
-) -> DataFrame:
+# Blocks above MAX_BLOCK keys add no labeled pairs; gold entities above
+# MAX_GOLD_ENTITY mentions are represented by a sample (``labeled_pairs``).
+MAX_BLOCK = 1 << 20
+MAX_GOLD_ENTITY = 256
+
+
+def labeled_pairs(keyed_with_labels: DataFrame) -> DataFrame:
     """Labeled + predicted mention pairs for the F1 gate.
 
     Two pair surfaces, unioned and deduped:
@@ -37,12 +39,13 @@ def labeled_pairs(
       surface. A gold pair whose mentions land in no common block would
       otherwise be invisible to ``fn``, which is exactly the failure mode the
       blocking stage introduces; recall must be charged for it. The self-join
-      is quadratic per entity, so entities larger than ``max_gold_entity``
+      is quadratic per entity, so entities larger than ``MAX_GOLD_ENTITY``
       mentions are REPRESENTED BY a deterministic per-entity sample (smallest
-      ``max_gold_entity`` mids): at web scale one hot entity ("ha noi") has
+      ``MAX_GOLD_ENTITY`` mids): at web scale one hot entity ("ha noi") has
       10^7 mentions, and its sampled pairs estimate the same recall the full
-      10^14-pair surface would. The drop is deterministic, not silent — count
-      oversampled entities via ``oversized_gold_entities``.
+      10^14-pair surface would. The sample is deterministic but not yet
+      counted; that count belongs in the pipeline's run report (ROADMAP
+      direction 1).
 
     Input columns: mid, keys (array), gold_entity, cluster_id.
     Output: mid_a, mid_b, is_match (gold), same_cluster (predicted).
@@ -51,7 +54,7 @@ def labeled_pairs(
         "mid", F.explode("keys").alias("key"), "gold_entity", "cluster_id"
     ).distinct()
     sizes = e.groupBy("key").agg(F.count(F.lit(1)).alias("n"))
-    e = e.join(sizes.filter((F.col("n") >= 2) & (F.col("n") <= max_block)).select("key"), "key")
+    e = e.join(sizes.filter((F.col("n") >= 2) & (F.col("n") <= MAX_BLOCK)).select("key"), "key")
 
     a = e.select("key", F.col("mid").alias("mid_a"), F.col("gold_entity").alias("g_a"), F.col("cluster_id").alias("c_a"))
     b = e.select("key", F.col("mid").alias("mid_b"), F.col("gold_entity").alias("g_b"), F.col("cluster_id").alias("c_b"))
@@ -73,7 +76,7 @@ def labeled_pairs(
             "_rk",
             F.row_number().over(Window.partitionBy("gold_entity").orderBy("mid")),
         )
-        .filter(F.col("_rk") <= max_gold_entity)
+        .filter(F.col("_rk") <= MAX_GOLD_ENTITY)
         .drop("_rk")
     )
     ga = m.select(F.col("mid").alias("mid_a"), "gold_entity", F.col("cluster_id").alias("c_a"))
@@ -95,19 +98,6 @@ def labeled_pairs(
             F.max("is_match").alias("is_match"),
             F.first("same_cluster").alias("same_cluster"),
         )
-    )
-
-
-def oversized_gold_entities(
-    keyed_with_labels: DataFrame, max_gold_entity: int = 256
-) -> DataFrame:
-    """Gold entities whose pair surface was sampled by ``labeled_pairs`` —
-    the no-silent-caps diagnostic (entity, mention count)."""
-    return (
-        keyed_with_labels.select("mid", "gold_entity").distinct()
-        .groupBy("gold_entity")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .filter(F.col("n_mentions") > max_gold_entity)
     )
 
 

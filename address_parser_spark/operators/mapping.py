@@ -84,37 +84,3 @@ def map_old_to_new(
         .drop("rn", "match_rank", "__row_id",
               "old_ward_code", "old_district_name", "old_province_name")
     )
-
-
-def map_new_to_old(
-    records: DataFrame,
-    mappings: DataFrame,
-    ward_code_col: str = "ward_code",
-    province_name_col: str | None = "province",
-) -> DataFrame:
-    """Reverse direction (reference ``map_new_address_ids_to_old``
-    :1425-1443): first mapping row agreeing with the record's new province,
-    else the first row."""
-    m = F.broadcast(mappings.select(
-        F.col("new_ward_code"), F.col("new_province_name"),
-        F.col("old_ward_code"), F.col("old_ward_name"),
-        F.col("old_district_name"), F.col("old_province_name"),
-        F.col("id").alias("mapping_id"),
-    ))
-    tagged = records.withColumn("__row_id", F.monotonically_increasing_id())
-    joined = tagged.join(m, tagged[ward_code_col] == m["new_ward_code"], "left")
-    # Null-guarded like map_old_to_new's _name_match: when the record's
-    # province value is NULL the rank must be 0, not NULL (a NULL rank would
-    # depend on nulls-last ordering instead of being deterministic).
-    match = (
-        F.col("new_province_name").isNotNull()
-        & F.col(province_name_col).isNotNull()
-        & F.col("new_province_name").contains(F.col(province_name_col))
-    ).cast("int") if province_name_col else F.lit(0)
-    w = Window.partitionBy("__row_id").orderBy(F.desc("match_rank"), F.asc("mapping_id"))
-    return (
-        joined.withColumn("match_rank", match)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "match_rank", "__row_id", "new_ward_code", "new_province_name")
-    )

@@ -35,13 +35,7 @@ from address_parser_spark.functions.columns import (
 DEFAULT_MAX_BLOCK = 64
 
 
-def with_blocking_keys(
-    mentions: DataFrame,
-    std_col: str = "entity_std",
-    digit_col: str = "std",
-    bands: int = 10,
-    rows: int = 3,
-) -> DataFrame:
+def with_blocking_keys(mentions: DataFrame) -> DataFrame:
     """Attach ``canon`` (entity-canonical string) and ``keys array<string>``.
 
     Four key families per mention, all JVM-side:
@@ -71,12 +65,12 @@ def with_blocking_keys(
     # requires digit_sig equality on top of canon equality.
     staged = (
         mentions
-        .withColumn("_key_toks", canonical_tokens_col(F.col(std_col)))
+        .withColumn("_key_toks", canonical_tokens_col(F.col("entity_std")))
         .withColumn("_key_str", F.concat_ws(" ", F.col("_key_toks")))
         .withColumn("_key_ghash", gram_hash_col(char_ngrams_col(F.col("_key_str"))))
         .withColumn(
             "canon",
-            F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col(std_col), " ")))),
+            F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col("entity_std"), " ")))),
         )
         .withColumn(
             "digit_sig",
@@ -106,7 +100,7 @@ def with_blocking_keys(
                     F.lit("u"),
                     F.concat_ws(
                         " ",
-                        F.filter(F.split(F.col(digit_col), " "), lambda t: t.rlike("^[0-9]+$")),
+                        F.filter(F.split(F.col("std"), " "), lambda t: t.rlike("^[0-9]+$")),
                     ),
                 ),
             ),
@@ -125,18 +119,14 @@ def with_blocking_keys(
                         F.concat_ws("", F.transform(F.col("_key_toks"), lambda t: F.substring(t, 1, 1))),
                     ),
                 ),
-                lsh_band_keys_from_hashes(F.col("_key_ghash"), bands=bands, rows=rows),
+                lsh_band_keys_from_hashes(F.col("_key_ghash")),
             ),
         )
         .drop("_key_toks", "_key_str", "_key_ghash")
     )
 
 
-def equality_edges(
-    keyed: DataFrame,
-    id_col: str = "mid",
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def equality_edges(keyed: DataFrame, max_block: int = DEFAULT_MAX_BLOCK) -> DataFrame:
     """String-identity edges: within every block of at most ``max_block``
     members, each pair whose canon AND digit_sig are EQUAL, computed without
     materializing non-matching pairs.
@@ -158,7 +148,7 @@ def equality_edges(
 
     exploded = keyed.select(
         F.xxhash64(F.col("canon"), F.col("digit_sig")).alias("h"),
-        F.col(id_col).alias("mid"),
+        F.col("mid"),
         F.explode("keys").alias("key"),
     )
     ms = F.col("ms")
@@ -193,10 +183,10 @@ def equality_edges(
     )
 
 
-def dropped_blocks(keyed: DataFrame, id_col: str = "mid", max_block: int = DEFAULT_MAX_BLOCK) -> DataFrame:
+def dropped_blocks(keyed: DataFrame, max_block: int = DEFAULT_MAX_BLOCK) -> DataFrame:
     """Oversized buckets excluded from pairing — surfaced for lineage metrics
     (no silent caps)."""
-    exploded = keyed.select(F.col(id_col).alias("mid"), F.explode("keys").alias("key")).distinct()
+    exploded = keyed.select("mid", F.explode("keys").alias("key")).distinct()
     return (
         exploded.groupBy("key")
         .agg(F.count(F.lit(1)).alias("block_n"))

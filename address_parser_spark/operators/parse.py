@@ -40,13 +40,10 @@ from address_parser_spark.functions.udfs import (
 )
 
 
-def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None = None,
-                      lang: str = "vi", carry_cols: list[str] | None = None,
-                      html_col: str = "html") -> DataFrame:
+def extract_normalize(pages: DataFrame, registries: dict[str, list[str]]) -> DataFrame:
     """pages → one row per extracted mention: normalized forms, shingles,
-    detected components, compact key. Narrow — no shuffle; the scan reads only
-    (url, text, lang) plus any ``carry_cols`` (e.g. the event-time column for
-    the streaming path).
+    detected components, compact key. Narrow — no shuffle; the scan reads
+    only (url, text, lang), plus ``html`` on the html branch.
 
     When the frame carries an ``html`` column, pages whose ``text`` is
     null/empty take a branch whose fused UDF FIRST extracts text from the
@@ -61,29 +58,24 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
     concurrent Python workers per task slot on the miss branch (and ~0.8 s
     of pure overhead at the 1200-page bench even when the miss branch was
     empty)."""
-    regs = registries or {"province": [], "district": [], "ward": []}
-    features, features_html = make_extract_features_udfs(regs, pages.sparkSession)
-    base = pages.filter(F.col("lang") == lang)
-    carry = list(carry_cols or [])
-    if html_col in pages.columns:
+    features, features_html = make_extract_features_udfs(registries, pages.sparkSession)
+    base = pages.filter(F.col("lang") == "vi")
+    if "html" in pages.columns:
         need = F.col("text").isNull() | (F.col("text") == "")
         exploded = (
             base.filter(~need)
-            .select("url", *carry, F.explode(features(F.col("text"))).alias("f"))
+            .select("url", F.explode(features(F.col("text"))).alias("f"))
             .unionByName(
                 base.filter(need)
-                .select("url", *carry, F.explode(features_html(F.col(html_col))).alias("f"))
+                .select("url", F.explode(features_html(F.col("html"))).alias("f"))
             )
         )
     else:
-        exploded = base.select(
-            "url", *carry, F.explode(features(F.col("text"))).alias("f")
-        )
+        exploded = base.select("url", F.explode(features(F.col("text"))).alias("f"))
     return (
         exploded
         .select(
             "url",
-            *(carry_cols or []),
             F.col("f.mention").alias("mention"),
             F.col("f.std").alias("std"),
             F.col("f.std_basic").alias("std_basic"),
@@ -98,7 +90,7 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
         # ``set(input_ngram_list)``, :2674-2676) and Dice (:2812-2824) consume
         # distinct grams; the within-input multiplicity signal (partial flag)
         # is already folded in by the extract UDF.
-        .withColumn("grams", char_ngrams_col(F.col("std"), distinct=True))
+        .withColumn("grams", char_ngrams_col(F.col("std")))
         .withColumn("mid", F.xxhash64("url", "mention"))
     )
 

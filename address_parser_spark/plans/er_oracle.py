@@ -132,15 +132,10 @@ def local_er_expected(gaz, n_pages: int, seed: int = 42):
 
 _ROW_FIELDS = ("province", "district", "ward", "street_address", "format", "entity_key")
 
-# Full driver-oracle row shape: everything the flagship query emits. Cluster
-# labels are implementation-defined, so the comparable form replaces them
+# Cluster labels are implementation-defined, so the driver rows replace them
 # with ``cluster_rep`` — the lexicographically smallest "url\nmention" member
 # of the cluster (UTF-8 byte order == code-point order, so Spark's min() and
 # Python's min() agree).
-_DRIVER_FIELDS = (
-    "url", "mention", "std", "province", "district", "ward",
-    "street_address", "format", "entity_key", "cluster_rep",
-)
 
 
 def expected_to_driver_rows(rows: dict, partition) -> list[dict]:

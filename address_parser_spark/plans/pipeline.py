@@ -24,7 +24,7 @@ from address_parser_spark.gazetteer.nodes import (
     nodes_to_spark,
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
-from address_parser_spark.operators.cluster import cluster_mentions, connected_components
+from address_parser_spark.operators.cluster import cluster_mentions
 from address_parser_spark.operators.pairs import (
     equality_edges,
     with_blocking_keys,

@@ -1,4 +1,4 @@
-"""Sources & sinks: synthetic pages corpus, file readers, checkpointed stages."""
+"""Sources & sinks: synthetic pages corpus, gazetteer reader, checkpointed stages."""
 
 from address_parser_spark.sources.pages import (
     PAGES_SCHEMA,

@@ -493,25 +493,3 @@ def synth_pages_spark(
 
     rng_df = spark.range(n_pages, numPartitions=partitions)
     return rng_df.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def gold_mentions_spark(
-    spark: SparkSession, gaz: Gazetteer, n_pages: int, seed: int = 42,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distributed gold sidecar (same determinism contract as the pages)."""
-    import pandas as pd
-
-    gidx = _GazIndex(gaz)
-    bc = spark.sparkContext.broadcast(gidx)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = bc.value
-        cols = ["url", "mention", "province_code", "district_code", "ward_code", "is_new"]
-        for batch in batches:
-            rows = []
-            for pid in batch["id"]:
-                rows.extend(render_page(int(pid), g, seed)[1])
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(n_pages, numPartitions=partitions).mapInPandas(gen, schema=GOLD_SCHEMA)

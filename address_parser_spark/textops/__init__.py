@@ -16,9 +16,8 @@ from address_parser_spark.textops.normalize import (
     strip_accents,
     tokenize,
 )
-from address_parser_spark.textops.ngrams import char_ngrams, char_ngram_set, word_shingles
+from address_parser_spark.textops.ngrams import char_ngrams, char_ngram_set
 from address_parser_spark.textops.similarity import (
-    dice_coefficient,
     indel_ratio,
     lcs_length,
     partial_ratio,
@@ -37,8 +36,6 @@ __all__ = [
     "tokenize",
     "char_ngrams",
     "char_ngram_set",
-    "word_shingles",
-    "dice_coefficient",
     "indel_ratio",
     "lcs_length",
     "partial_ratio",

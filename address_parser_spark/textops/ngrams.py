@@ -1,4 +1,4 @@
-"""Character n-gram shingles and word shingles.
+"""Character n-gram shingles.
 
 ``char_ngrams`` carries the parity contract with the reference's
 ``generate_ngrams`` (inexus_parser.py:2657-2660): the string is padded with one
@@ -21,15 +21,6 @@ def char_ngrams(s: str, n: int = 4) -> list[str]:
     return [padded[i : i + n] for i in range(len(padded) - n + 1)]
 
 
-def char_ngram_set(s: str, n: int = 4) -> set[str]:
-    """Distinct shingles — the set the Dice coefficient is defined over."""
-    return set(char_ngrams(s, n))
-
-
-def word_shingles(tokens: list[str], k: int = 3) -> list[str]:
-    """k-token shingles joined by a single space; used for document-level
-    near-dup detection (MinHash over word shingles scales better than char
-    shingles for long web documents)."""
-    if len(tokens) < k:
-        return [" ".join(tokens)] if tokens else []
-    return [" ".join(tokens[i : i + k]) for i in range(len(tokens) - k + 1)]
+def char_ngram_set(s: str) -> set[str]:
+    """Distinct 4-gram shingles — the set the Dice coefficient is defined over."""
+    return set(char_ngrams(s))

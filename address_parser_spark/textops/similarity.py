@@ -170,15 +170,3 @@ def wratio(a: str, b: str) -> float:
     partial = partial_ratio(a, b)
     partial_token = partial_ratio(_token_sorted(a), _token_sorted(b))
     return max(base, partial * partial_scale, partial_token * 0.95 * partial_scale)
-
-
-# --------------------------------------------------------------------------
-# Set scorers
-# --------------------------------------------------------------------------
-
-def dice_coefficient(set_a: frozenset | set, set_b: frozenset | set) -> float:
-    """Sørensen–Dice over shingle sets: ``2·|A∩B| / (|A|+|B|)``."""
-    denom = len(set_a) + len(set_b)
-    if denom == 0:
-        return 0.0
-    return (2.0 * len(set_a & set_b)) / denom

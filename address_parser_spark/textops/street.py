@@ -13,7 +13,7 @@ characters. Part of the byte-identical per-url invariant; golden-tested in
 from __future__ import annotations
 
 import re
-from typing import Iterable, Optional
+from typing import Optional
 
 from address_parser_spark.textops.normalize import normalize_basic, normalize_token
 

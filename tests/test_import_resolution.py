@@ -31,11 +31,13 @@ CALLERS = sorted(
 _EMBEDDED = re.compile(rf"^\s*from ({PACKAGE}(?:\.\w+)*) import \(?([\w, ]+)\)?\s*$", re.M)
 
 
-def _string_parts(node: ast.AST) -> str | None:
+def _string_parts(node: ast.AST, hole: str = "") -> str | None:
+    """The text of a string literal; an f-string's replacement fields
+    become ``hole``."""
     if isinstance(node, ast.Constant) and isinstance(node.value, str):
         return node.value
     if isinstance(node, ast.JoinedStr):
-        return "".join(v.value for v in node.values if isinstance(v, ast.Constant))
+        return "".join(v.value if isinstance(v, ast.Constant) else hole for v in node.values)
     return None
 
 
@@ -108,18 +110,22 @@ def test_every_caller_call_shape_binds():
     """A signature edit must not strand a caller: for every package callable
     a caller (or the library itself) imports, bind each call site's
     positional count and keyword names to its signature — among them the
-    benchmark job's ``build_repair_state(gaz, nodes)``,
-    ``extract_normalize(pages, registries)`` and ``resolve_mentions``' four
-    positionals plus ``nodes=`` and ``repair_state=``."""
+    benchmark's ``build_repair_state(gaz, nodes)``,
+    ``extract_normalize(pages, registries)``, ``resolve_mentions``' four
+    positionals plus ``nodes=`` and ``repair_state=``,
+    ``with_blocking_keys(x)``, ``equality_edges``/``dropped_blocks(keyed,
+    max_block=)`` and ``labeled_pairs(x)``."""
     shapes: dict[tuple, set[str]] = {}
     for path in [*CALLERS, *ROOT.glob(f"{PACKAGE}/**/*.py")]:
         for module, name, n_args, kwargs, line in _call_shapes(path):
             where = f"{path.relative_to(ROOT)}:{line}"
             shapes.setdefault((module, name, n_args, kwargs), set()).add(where)
-    job = {(m.rsplit(".", 1)[-1], n, a, k) for (m, n, a, k), w in shapes.items()
-           if any(x.startswith("perfbench/job.py:") for x in w)}
+    bench = {(m.rsplit(".", 1)[-1], n, a, k) for (m, n, a, k), w in shapes.items()
+             if any(x.startswith("perfbench/") for x in w)}
     assert {("nodes", "build_repair_state", 2, ()), ("parse", "extract_normalize", 2, ()),
-            ("parse", "resolve_mentions", 4, ("nodes", "repair_state"))} <= job
+            ("parse", "resolve_mentions", 4, ("nodes", "repair_state")),
+            ("pairs", "with_blocking_keys", 1, ()), ("pairs", "equality_edges", 1, ("max_block",)),
+            ("pairs", "dropped_blocks", 1, ("max_block",)), ("eval", "labeled_pairs", 1, ())} <= bench
     failures, checked = [], 0
     for (module, name, n_args, kwargs), where in sorted(shapes.items()):
         obj = getattr(importlib.import_module(module), name, None)
@@ -133,3 +139,127 @@ def test_every_caller_call_shape_binds():
             failures.append(f"{module}.{name}{sig} rejects the call at {sorted(where)}: {exc}")
     assert checked > 100
     assert not failures, "\n".join(failures)
+
+
+# --------------------------------------------------------------------------
+# Reachability: no library def or class that only tests reach
+# --------------------------------------------------------------------------
+
+ROOTS = [p for p in CALLERS if "tests" not in p.relative_to(ROOT).parts]
+
+
+def _docstrings(tree: ast.AST) -> set[int]:
+    return {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and node.body and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant) and isinstance(node.body[0].value.value, str)
+    }
+
+
+def _refs(node: ast.AST) -> set[str]:
+    """Names a subtree refers to: ``Name`` ids, ``Attribute`` attrs and
+    import aliases. String contents (docstrings included) are not code."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out |= {n.name.rsplit(".", 1)[-1], n.asname} - {None}
+    return out
+
+
+def _template_holes(text: str) -> str:
+    """A ``str.format`` template with each replacement field as ``0`` and
+    doubled braces as single ones."""
+    text = text.replace("{{", "\0").replace("}}", "\1")
+    return re.sub(r"\{[^{}]*\}", "0", text).replace("\0", "{").replace("\1", "}")
+
+
+def _root_refs(source: str) -> set[str]:
+    """Names a caller refers to, its embedded child programs included: every
+    non-docstring string or f-string naming the package is parsed as Python
+    (as written, then as a ``str.format`` template); one that parses neither
+    way still contributes the names its ``from ... import`` lines bind."""
+    tree = ast.parse(source)
+    out, docs = _refs(tree), _docstrings(tree)
+    for node in ast.walk(tree):
+        text = None if id(node) in docs else _string_parts(node, hole="0")
+        if text is None or PACKAGE not in text:
+            continue
+        for candidate in (text, _template_holes(text)):
+            try:
+                out |= _refs(ast.parse(candidate))
+                break
+            except SyntaxError:
+                continue
+        else:
+            out |= {n.strip() for _, names in _EMBEDDED.findall(text) for n in names.split(",")}
+    return out
+
+
+def _orphans(roots: dict[str, str], library: dict[str, str]) -> list[str]:
+    """``path:line name`` of each top-level def/class in ``library`` (path →
+    source) that no root (path → source) reaches through name references,
+    transitively. Module-level statements other than imports run on import,
+    so their references count as roots too. Matching is by bare name, so a
+    def shares reachability with any same-named def or attribute."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    reached: set[str] = set().union(*(_root_refs(src) for src in roots.values()))
+    for path, src in library.items():
+        for stmt in ast.parse(src).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append((path, stmt))
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                reached |= _refs(stmt)
+    todo, seen = [n for n in reached if n in defs], set()
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo += [r for _, node in defs[name] for r in _refs(node) if r in defs]
+    return sorted(f"{path}:{node.lineno} {name}"
+                  for name, found in defs.items() if name not in seen for path, node in found)
+
+
+def test_reachability_walker_is_not_vacuous():
+    """The guard flags a def nothing calls and one only a docstring names;
+    it follows references through other defs and into an f-string child
+    program."""
+    library = {"lib.py": '''
+def via_child(): pass
+def helper(): pass
+def used(): return helper()
+def orphan(): pass
+def named_in_docstring(): pass
+def documenter():
+    """Calls named_in_docstring() -- prose, not a reference."""
+'''}
+    roots = {"script.py": '''
+from lib import used, documenter
+n = 3
+CHILD = f"""
+import {PACKAGE}.lib as m
+x = {n}
+m.via_child(x)
+"""
+'''.replace("{PACKAGE}", PACKAGE)}
+    assert sorted(o.split()[1] for o in _orphans(roots, library)) == [
+        "named_in_docstring", "orphan"]
+
+
+def test_every_library_def_is_reachable_from_a_non_test_caller():
+    """Every top-level def and class under the package is reached from the
+    scripts, the job, the benchmark harnesses, ``bench.py`` or the driver
+    entry (their embedded child programs included), directly or through
+    other defs. A def only tests reach is dead library surface: delete it,
+    or fold it into the test that uses it."""
+    roots = {str(p.relative_to(ROOT)): p.read_text() for p in ROOTS}
+    library = {str(p.relative_to(ROOT)): p.read_text()
+               for p in sorted(ROOT.glob(f"{PACKAGE}/**/*.py"))}
+    assert "perfbench/job.py" in roots and not any(r.startswith("tests/") for r in roots)
+    orphans = _orphans(roots, library)
+    assert not orphans, "library defs no non-test caller reaches:\n" + "\n".join(orphans)

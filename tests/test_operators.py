@@ -1,11 +1,10 @@
 """Operator-level tests: ward mapping (J4), NER pipeline, dedup family,
-similarity search, readers."""
+similarity search."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from address_parser_spark.gazetteer import synth_gazetteer
-from address_parser_spark.operators.mapping import map_new_to_old, map_old_to_new, mappings_to_spark
+from address_parser_spark.operators.mapping import map_old_to_new, mappings_to_spark
 
 
 @pytest.fixture(scope="module")
@@ -27,20 +26,6 @@ def test_map_old_to_new_prefers_matching_district(spark, gaz, mappings):
     got = {r["ward_code"]: r["new_ward_code"] for r in mapped.collect()}
     wrong = {k for k, v in got.items() if truth.get(k) != v}
     assert not wrong
-
-
-def test_map_new_to_old_roundtrip(spark, gaz, mappings):
-    new = spark.createDataFrame(
-        [(w["code"],) for w in gaz.new_wards], "ward_code string"
-    )
-    mapped = map_new_to_old(new, mappings, province_name_col=None)
-    assert mapped.count() == len(gaz.new_wards)
-    # each new ward's preferred old row must be one of its true members
-    members: dict[str, set] = {}
-    for m in gaz.ward_mappings:
-        members.setdefault(m["new_ward_code"], set()).add(m["old_ward_code"])
-    for r in mapped.collect():
-        assert r["old_ward_code"] in members[r["ward_code"]]
 
 
 def test_ner_pipeline(spark, gaz):
@@ -149,16 +134,3 @@ def test_embedding_near_dups_and_ann(spark):
     assert [r["neighbor_id"] for r in topk] == [1, 2]
     ann = ann_lsh_topk(emb, query_ids=[0], k=3, bucket_dims=4).collect()
     assert all(r["neighbor_id"] != 3 for r in ann)  # 3 is outside 0's bucket
-
-
-def test_readers_roundtrip(spark, tmp_path):
-    from address_parser_spark.sources.readers import read_jsonl, read_name_list, write_jsonl
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    write_jsonl(df, str(tmp_path / "out"))
-    back = read_jsonl(spark, str(tmp_path / "out"))
-    assert back.count() == 2
-
-    (tmp_path / "names.txt").write_text("Hà Nội\n\n  Đà Nẵng \n", encoding="utf-8")
-    names = read_name_list(spark, str(tmp_path / "names.txt")).collect()
-    assert {r["name_std"] for r in names} == {"ha noi", "da nang"}

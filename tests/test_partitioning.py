@@ -3,8 +3,21 @@ dedup.with_word_shingles)."""
 
 from pyspark.sql import functions as F
 
-from address_parser_spark.operators.dedup import with_word_shingles, word_shingles_col
+from address_parser_spark.operators.dedup import with_word_shingles
 from address_parser_spark.operators.partitioning import fan_out
+from address_parser_spark.operators.textquality import tokens_col
+
+
+def _word_shingles_col(text, k: int = 3):
+    """Reference form of ``with_word_shingles``: the token array inlined in
+    the per-position lambda, so it re-tokenizes once per shingle position."""
+    toks = tokens_col(F.lower(text))
+    n = F.size(toks)
+    sh = F.when(
+        n >= k,
+        F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.concat_ws(" ", F.slice(toks, i, k))),
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    return F.array_distinct(sh)
 
 
 def test_fan_out_widens_narrow_plans(spark):
@@ -71,7 +84,7 @@ def test_with_word_shingles_matches_column_form(spark):
     }
     inline = {
         r["doc_id"]: sorted(r["sh"])
-        for r in docs.select("doc_id", word_shingles_col(F.col("text"), 3).alias("sh")).collect()
+        for r in docs.select("doc_id", _word_shingles_col(F.col("text"), 3).alias("sh")).collect()
     }
     assert staged == inline
     assert staged[2] == ["short text"]  # below k: single joined shingle

@@ -8,7 +8,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from address_parser_spark.textops.similarity import (
-    dice_coefficient,
     indel_ratio,
     lcs_length,
     partial_ratio,
@@ -64,4 +63,3 @@ def test_known_values():
     assert indel_ratio("", "") == 100.0
     assert indel_ratio("abc", "") == 0.0
     assert partial_ratio("ha noi", "thanh pho ha noi viet nam") == 100.0
-    assert dice_coefficient({"ab", "bc"}, {"ab", "cd"}) == 0.5
